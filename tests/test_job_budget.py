@@ -25,6 +25,7 @@ from wrtd_etl_spark.sources.versioned import (
     add_unique_constraint,
     delete_where,
     merge_into,
+    replace_where,
     update_where,
     write_snapshot,
 )
@@ -84,6 +85,37 @@ def test_merge_commit_job_budget(spark, base, tmp_path):
         )
         <= 6
     )
+    cdc = src.withColumn(
+        "op", F.when(F.col("k") % 200 == 0, "D").otherwise("U")
+    )
+    assert (
+        _count_jobs(
+            spark,
+            lambda: merge_into(
+                spark,
+                t,
+                cdc,
+                ["k"],
+                delete_when=F.col("op") == "D",
+                source_meta_cols=["op"],
+                strategy="dv",
+            ),
+        )
+        <= 8
+    )
+    # insert-only merge: matched rows stay in place, new keys insert
+    fresh = base.filter("k % 97 = 0").withColumn(
+        "k", F.col("k") + F.when(F.col("k") % 2 == 0, 0).otherwise(5_000_000)
+    )
+    assert (
+        _count_jobs(
+            spark,
+            lambda: merge_into(
+                spark, t, fresh, ["k"], when_matched="keep", strategy="dv"
+            ),
+        )
+        <= 10
+    )
 
 
 def test_update_delete_job_budget(spark, base, tmp_path):
@@ -105,6 +137,36 @@ def test_update_delete_job_budget(spark, base, tmp_path):
             lambda: delete_where(spark, t, F.col("k") % 113 == 0, strategy="dv"),
         )
         <= 1
+    )
+    assert (
+        _count_jobs(spark, lambda: delete_where(spark, t, F.col("k") % 117 == 0))
+        <= 2
+    )
+    assert (
+        _count_jobs(
+            spark,
+            lambda: update_where(
+                spark,
+                t,
+                F.col("k") % 119 == 0,
+                {"bal": F.col("bal") - 1},
+                strategy="dv",
+            ),
+        )
+        <= 2
+    )
+    slice_ = F.col("k") <= 100
+    assert (
+        _count_jobs(
+            spark,
+            lambda: replace_where(
+                spark,
+                t,
+                slice_,
+                base.filter(slice_).withColumn("bal", F.col("bal") * 2),
+            ),
+        )
+        <= 3
     )
 
 

@@ -102,3 +102,22 @@ def test_idempotency_guard(spark):
     processed = spark.createDataFrame([(2,), (9,)], "id long")
     got = sorted(r.id for r in dedup_against_processed(incoming, processed, "id").collect())
     assert got == [1, 3]
+
+
+def test_state_partitions_sizes_directory_sources(tmp_path, monkeypatch):
+    """A directory source (a parquet dataset) is sized by the files under
+    it, not by the directory inode. Spark-free: sparse files stand in for
+    200 MB of data, and a stub carries the executor parallelism."""
+    from types import SimpleNamespace
+
+    from wrtd_etl_spark.streaming.dedup import state_partitions_for
+
+    monkeypatch.delenv("SPARK_GRAFT_STATE_PARTITIONS", raising=False)
+    (tmp_path / "ds" / "day=1").mkdir(parents=True)
+    for rel in ("ds/part-0.parquet", "ds/day=1/part-1.parquet"):
+        with open(tmp_path / rel, "wb") as f:
+            f.truncate(100 * 1024 * 1024)
+    stub = SimpleNamespace(sparkContext=SimpleNamespace(defaultParallelism=4))
+    assert state_partitions_for(stub, str(tmp_path / "ds")) == 4
+    assert state_partitions_for(stub, str(tmp_path / "ds" / "part-0.parquet")) == 2
+    assert state_partitions_for(stub, str(tmp_path / "missing")) == 2

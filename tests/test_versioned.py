@@ -907,3 +907,26 @@ def test_trunc_string_stat_edges():
     # short strings pass through untouched; non-strings too
     assert _trunc_string_stat("ab", "cd") == ["ab", "cd"]
     assert _trunc_string_stat(1, 2) == [1, 2]
+
+
+def test_dv_position_pull_demotes_only_max_result_size():
+    """Only a spark.driver.maxResultSize overflow turns the DV position
+    pull into the copy-on-write bail; any other failure propagates, even
+    one whose message says "bigger than". Spark-free: a stub stands in
+    for the hit frame."""
+    from wrtd_etl_spark.sources.versioned import _dv_positions_pdf
+
+    class Hits:
+        def __init__(self, msg: str):
+            self.msg = msg
+
+        def toPandas(self):
+            raise RuntimeError(self.msg)
+
+    with pytest.raises(RuntimeError, match="bigger than"):
+        _dv_positions_pdf(Hits("generated method is bigger than 64 KB"))
+    overflow = Hits(
+        "Total size of serialized results of 3 tasks (1100.0 MiB) is "
+        "bigger than spark.driver.maxResultSize (1024.0 MiB)"
+    )
+    assert _dv_positions_pdf(overflow) is None

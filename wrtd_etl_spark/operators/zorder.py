@@ -89,25 +89,6 @@ def zorder_key(
     return z
 
 
-def zorder_key_sql(
-    exprs: list[str], bounds: list[tuple[float, float]], bits: int = 8
-) -> str:
-    """The DuckDB-identical SQL twin of :func:`zorder_key`."""
-    n = len(exprs)
-    dim_sqls = []
-    for d, (e, (lo, hi)) in enumerate(zip(exprs, bounds)):
-        span = float(hi) - float(lo) or 1.0
-        lvl = (
-            f"LEAST(CAST(FLOOR(LEAST(GREATEST((CAST({e} AS DOUBLE) - {float(lo)})"
-            f" / {span}, 0.0), 1.0) * {float(1 << bits)}) AS BIGINT), {(1 << bits) - 1})"
-        )
-        parts = [
-            f"(((({lvl}) >> {i}) & 1) << {i * n + d})" for i in range(bits)
-        ]
-        dim_sqls.append(" | ".join(parts))
-    return "(" + " | ".join(f"({s})" for s in dim_sqls) + ")"
-
-
 def write_zordered(
     df: DataFrame,
     path: str,

@@ -45,11 +45,6 @@ def sq_norm(a: Column) -> Column:
     return _dot(a, a)
 
 
-def _quantized_cosine(a: Column, b: Column) -> Column:
-    """Cosine rounded to 1e-6 via exact integer quantization."""
-    return F.floor(cosine(a, b) * 1000000 + 0.5) / F.lit(1000000.0)
-
-
 def _quantized_cosine_with_norms(a: Column, b: Column, na: Column, nb: Column) -> Column:
     """Quantized cosine with precomputed squared norms (same IEEE op order
     as the SQL oracle: dot / sqrt(na*nb))."""

@@ -7,26 +7,23 @@ job against an immutable columnar table:
 * K1/K2  append          → ``write.mode('append').parquet``
 * K3/K5  upsert/update   → operators.upsert (anti-join ∪ + atomic swap)
 * K4     outbox insert   → streaming.outbox.make_outbox + append
-* K6     webhook send    → ``foreachBatch``-style side-effecting sink with
-                           an idempotency key (at-least-once, like the
-                           reference's send-then-flag order)
+* K6     webhook send    → streaming.outbox.drain_outbox (at-least-once,
+                           like the reference's send-then-flag order)
 * K7     state write     → the same upsert primitive on a small state table
 * K8     console         → ``df.show()`` (debug only)
 
 Scale notes: fact tables are written partitioned by a bucket of their key
 (``partitionBy``) so per-key queries prune partitions; writers never
-collect; the side-effecting sink processes per partition on executors.
+collect.
 """
 
 from __future__ import annotations
 
 import os
-from collections.abc import Callable, Iterable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .operators.upsert import upsert_parquet
 from .session import default_parallelism
 
 #: number of hash buckets used when partitioning fact tables by key
@@ -75,30 +72,6 @@ def write_bucketed(
     if sort:
         writer = writer.sortBy(key)
     writer.saveAsTable(table)
-
-
-def overwrite_state(spark: SparkSession, path: str, updates: DataFrame, key: str) -> None:
-    """K5/K7: idempotent small-state update (write-temp-then-swap upsert)."""
-    upsert_parquet(spark, path, updates, key)
-
-
-def send_with_idempotency(
-    df: DataFrame,
-    key: str,
-    send: Callable[[Iterable], None],
-) -> DataFrame:
-    """K6/T3: side-effecting send of each row, at-least-once.
-
-    Mirrors the reference's ordering (send first, then the caller persists
-    the flag — bot/botrun.py:306-309): a crash between the two re-sends,
-    and the consumer dedups on ``key``. Returns the sent keys so the
-    caller can flip flags via the upsert primitive.
-    """
-    rows = df.collect()  # outbox batches are small by construction
-    send(rows)
-    return df.sparkSession.createDataFrame(
-        [(r[key],) for r in rows], f"{key} long"
-    )
 
 
 def show(df: DataFrame, n: int = 20) -> None:

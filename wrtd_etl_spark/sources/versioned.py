@@ -66,6 +66,7 @@ import os
 import shutil
 import time
 import uuid
+from dataclasses import dataclass, field
 
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -3087,68 +3088,15 @@ def delete_where(
     untouched, the history reading append-then-delete-of-older-rows.
     ``"serializable"`` restores strict behavior (any concurrent commit
     raises :class:`CommitConflict`)."""
-    base = _read_pointer(table)
-    if base is None:
-        raise FileNotFoundError(f"no committed version in {table}")
-    # ROOT manifest: rewrites touch detail sidecars only for segments
-    # the predicate can reach; everything else carries as heads
-    manifest = _read_manifest_root(table, base)
-    aliases = manifest.get("aliases", {})
-    if strategy not in ("cow", "dv", "auto"):
-        raise ValueError(
-            f"strategy must be 'cow', 'dv' or 'auto', got {strategy!r}"
-        )
-    carried, rewrite_segs = _split_for_rewrite(
-        manifest, aliases, prune, point, table=table
-    )
-    if strategy in ("dv", "auto"):
-        v = _delete_where_dv(
-            spark,
-            table,
-            base,
-            manifest,
-            predicate,
-            carried,
-            rewrite_segs,
-            isolation,
-            required=strategy == "dv",
-        )
-        if v is not None:
-            return v  # DV commit landed (auto fell through otherwise)
-    new_segment = None
-    if rewrite_segs:
-        # normalize candidates through the same rename/cast/union path a
-        # read uses, so the predicate sees CURRENT column names/types
-        # (and, via the DV-aware read, never resurrects a row a prior
-        # deletion vector already removed). Surviving rows carry their
-        # row ids AND commit versions into the replacement files (keyed
-        # CDC cancels them; a delete never bumps survivors' cv).
-        tracked = all(_seg_row_tracked(s) for s in rewrite_segs)
-        part = _read_segments(
-            spark,
-            table,
-            {**manifest, "segments": rewrite_segs},
-            with_row_ids=tracked,
-            with_commit_versions=tracked,
-        )
-        survivors = part.filter(~F.coalesce(predicate, F.lit(False)))
-        new_segment = _rewrite_segment(
-            spark,
-            table,
-            manifest,
-            rewrite_segs,
-            survivors,
-            changed_cols=set(),  # deletion cannot create a duplicate
-        )
-    segments = carried + ([new_segment] if new_segment else [])
-    return _commit_rewrite(
-        table,
-        base,
-        manifest,
-        segments,
+    base, manifest = _dml_base(table, strategy)
+    spec = _DmlSpec(
         "delete",
-        rebase=_blind_rebase(isolation),
+        _blind_rebase(isolation),
+        match=predicate,
+        prune=prune,
+        point=point,
     )
+    return _run_dml(spark, table, base, manifest, spec, strategy)
 
 
 def _dv_candidate_scan(
@@ -3216,77 +3164,388 @@ def _dv_candidate_scan(
     return out
 
 
-def _delete_where_dv(
+@dataclass
+class _DmlSpec:
+    """One DML statement as :func:`_run_dml` executes it. The public
+    verbs validate their arguments and fill this in; the candidate
+    split, the copy-on-write / deletion-vector choice, insert handling
+    and the commit are shared.
+
+    * ``match`` — the row predicate (DELETE / UPDATE / REPLACE WHERE;
+      SQL NULL semantics: a NULL row is not matched). None means the
+      keyed join of the candidates against ``src`` on ``keys`` (MERGE:
+      the source renamed to ``__s_*`` plus the ``__s_del`` flag and the
+      ``__m`` match marker).
+    * ``sets`` — ``{target_col: Column}`` applied to the matched rows
+      that survive. None means no SET clause: surviving matched rows
+      stay in place untouched.
+    * Dropped rows: MERGE drops the matched rows whose source row sets
+      ``__s_del``; a predicate verb drops every match when it has no
+      SET clause and none otherwise.
+    * ``inserts`` — the rows to insert, before the MERGE anti-join,
+      identity minting and default fill.
+    * ``by_source`` — MERGE's ``when_not_matched_by_source``.
+    * ``prune`` / ``point`` — the candidate-file pruning
+      (:func:`_split_for_rewrite`); ``rebase`` — the concurrent-append
+      guard handed to :func:`_commit_rewrite`.
+    * ``schema`` / ``extra`` — an evolving merge's widened schema and
+      the caller metadata to commit; ``nk`` bounds a deletion-vector
+      merge's insert count for file sizing (distinct source keys)."""
+
+    verb: str
+    rebase: "Callable[[dict], bool] | None"
+    match: "Column | None" = None
+    src: "DataFrame | None" = None
+    keys: "list[str]" = field(default_factory=list)
+    sets: "dict[str, Column] | None" = None
+    inserts: "DataFrame | None" = None
+    by_source: "str | dict[str, Column] | None" = None
+    prune: "dict[str, tuple] | None" = None
+    point: "dict[str, list] | None" = None
+    schema: "dict | None" = None
+    extra: "dict | None" = None
+    nk: int = 0
+
+
+#: operationMetrics each deletion-vector commit records
+_DV_METRICS = {
+    "delete": ("rows_deleted",),
+    "update": ("rows_updated",),
+    "merge": ("rows_matched", "rows_deleted", "rows_updated", "rows_inserted"),
+}
+
+
+def _dml_base(table: str, strategy: str = "cow") -> "tuple[int, dict]":
+    """The base version of a DML statement and its ROOT manifest:
+    rewrites touch detail sidecars only for segments the statement can
+    reach; everything else carries as heads."""
+    base = _read_pointer(table)
+    if base is None:
+        raise FileNotFoundError(f"no committed version in {table}")
+    if strategy not in ("cow", "dv", "auto"):
+        raise ValueError(
+            f"strategy must be 'cow', 'dv' or 'auto', got {strategy!r}"
+        )
+    return base, _read_manifest_root(table, base)
+
+
+def _run_dml(
     spark: SparkSession,
     table: str,
     base: int,
     manifest: dict,
-    predicate,
-    carried: list[dict],
-    rewrite_segs: list[dict],
-    isolation: str,
-    required: bool,
-) -> "int | None":
-    """The merge-on-read DELETE: collect matching (file, row_index)
-    positions from the candidate files, merge them into each file's
-    cumulative deletion vector, and commit new segment details with the
-    SAME data files — metadata only. Returns the version, or None when
-    ineligible and ``required`` is False (auto falls back to CoW);
-    raises when ``required``."""
+    spec: _DmlSpec,
+    strategy: str = "cow",
+) -> int:
+    """Run one DML statement — Delta's shape: ONE "find touched files"
+    stage, then a single branch to a rewrite or to deletion vectors.
+
+    1. :func:`_split_for_rewrite` splits the version into carried and
+       candidate files.
+    2. Copy-on-write reads the candidates and rewrites the survivors
+       (matched rows updated, dropped rows filtered out). Deletion
+       vectors scan the candidates (:func:`_dv_candidate_scan`), pull
+       the matched positions and fold them into each file's vector
+       (:func:`_dv_mark_deleted`); the updated matched rows are
+       re-emitted. ``"dv"`` raises where vectors are refused;
+       ``"auto"`` falls back to copy-on-write.
+    3. The rewritten/updated rows and the inserts land as ONE fresh
+       segment (:func:`_rewrite_segment`), and :func:`_commit_rewrite`
+       commits, restaging minted identity ids on a race."""
     from pyspark.sql.types import StructType
 
-    def bail(reason: str):
-        if required:
-            raise ValueError(
-                f"deletion-vector delete on {table} refused: {reason}"
-            )
-        return None
-
-    if manifest.get("unique"):
-        return bail(
-            "table has UNIQUE constraints (the append-side existence "
-            "probe reads raw files and would see deleted keys); use "
-            "strategy='cow'"
-        )
-    if not rewrite_segs:
-        # nothing can match: metadata-only no-op delete, same version
-        # bump the CoW path would produce
-        return _commit_rewrite(
-            table, base, manifest, carried, "delete_dv",
-            rebase=_blind_rebase(isolation),
-        )
-    hits = _dv_candidate_scan(spark, table, manifest, rewrite_segs)
-    hits = hits.filter(F.coalesce(predicate, F.lit(False))).select(
-        "__dvb", "__dvp"
+    carried, rewrite_segs = _split_for_rewrite(
+        manifest, manifest.get("aliases", {}), spec.prune, spec.point,
+        table=table,
     )
-    # ONE pass (r14 perf): the position pull IS the count — the old
-    # count()-then-toPandas shape scanned the candidate files twice (and
-    # needed a localCheckpoint pin to do it consistently). The size cap
-    # is enforced on the collected frame; a transfer so large it trips
-    # spark.driver.maxResultSize bails to CoW exactly like an over-cap
-    # count did.
-    pdf = _dv_positions_pdf(hits)
-    if pdf is None:
-        return bail(
-            "matching positions exceed spark.driver.maxResultSize; a "
-            "copy-on-write rewrite is the better plan"
+    schema = spec.schema or manifest["schema"]
+    target = StructType.fromJson(schema)
+    keyed = spec.src is not None
+    sets = spec.sets or {}
+    drop = F.col("__s_del") if keyed else F.lit(spec.sets is None)
+
+    def _join(cand: DataFrame, how: str) -> DataFrame:
+        cond = None
+        for k in spec.keys:
+            c = cand[k] == spec.src[f"__s_{k}"]
+            cond = c if cond is None else cond & c
+        return cand.join(spec.src, cond, how)
+
+    refusal = None
+    n_matched = n_del = 0
+    if strategy != "cow":
+        if manifest.get("unique"):
+            refusal = (
+                "table has UNIQUE constraints (the append-side existence "
+                "probe reads raw files and would see deleted keys); use "
+                "strategy='cow'"
+            )
+        elif spec.by_source is not None:
+            refusal = (
+                "when_not_matched_by_source quantifies over every file — "
+                "inherently copy-on-write; use strategy='cow'"
+            )
+        elif rewrite_segs:
+            # an evolving merge's widened fields NULL/default-fill the
+            # way any evolved read does
+            cand = _dv_candidate_scan(
+                spark, table, {**manifest, "schema": schema}, rewrite_segs
+            )
+            hit = (
+                _join(cand, "inner")
+                if keyed
+                else cand.filter(F.coalesce(spec.match, F.lit(False)))
+            )
+            if keyed or spec.sets is not None:
+                # UPDATE and MERGE may re-read the match for the fresh
+                # segment: pin it, so the position pull (which
+                # materializes the checkpoint) and the write see one
+                # evaluation
+                hit = hit.localCheckpoint(eager=False)
+            pulled = hit
+            if keyed:
+                # ONE job (r14 perf): the match/delete counts ride the
+                # position pull via observe(), which sits below the
+                # victim filter so it counts every matched row
+                obs = Observation()
+                pulled = hit.observe(
+                    obs,
+                    F.count(F.lit(1)).alias("__m"),
+                    F.sum(F.when(F.col("__s_del"), 1).otherwise(0)).alias(
+                        "__d"
+                    ),
+                )
+            if spec.sets is None:
+                pulled = pulled.filter(drop)
+            # the position pull IS the count (r14): the size cap is
+            # checked on the collected frame
+            pdf = _dv_positions_pdf(pulled.select("__dvb", "__dvp"))
+            word = "matched" if keyed else "matching"
+            if pdf is None:
+                refusal = (
+                    f"{word} positions exceed spark.driver.maxResultSize; "
+                    "a copy-on-write rewrite is the better plan"
+                )
+            elif len(pdf) > DV_MAX_POSITIONS:
+                refusal = (
+                    f"{len(pdf)} {word} rows exceed DV_MAX_POSITIONS "
+                    f"({DV_MAX_POSITIONS}); a copy-on-write rewrite is the "
+                    "better plan"
+                )
+            elif keyed:
+                got = obs.get
+                n_matched, n_del = got["__m"], int(got["__d"] or 0)
+            else:
+                n_matched = len(pdf)
+                n_del = n_matched if spec.sets is None else 0
+        if refusal is not None and strategy == "dv":
+            what = "merge into" if keyed else f"{spec.verb} on"
+            raise ValueError(
+                f"deletion-vector {what} {table} refused: {refusal}"
+            )
+    dv = strategy != "cow" and refusal is None
+
+    parts: list[DataFrame] = []  # the fresh segment's rows, in order
+    if dv:
+        tracked = False
+        segments = carried + (
+            _dv_mark_deleted(table, rewrite_segs, pdf) if rewrite_segs else []
         )
-    n = len(pdf)
-    if n > DV_MAX_POSITIONS:
-        return bail(
-            f"{n} matching rows exceed DV_MAX_POSITIONS "
-            f"({DV_MAX_POSITIONS}); a copy-on-write rewrite is the "
-            "better plan"
+        if spec.sets is not None and n_matched - n_del > 0:
+            parts.append(
+                hit.filter(~drop).select(
+                    *[
+                        (sets[f.name] if f.name in sets else F.col(f.name))
+                        .cast(f.dataType)
+                        .alias(f.name)
+                        for f in target.fields
+                    ]
+                )
+            )
+    else:
+        segments = list(carried)
+        tracked = bool(rewrite_segs) and all(
+            _seg_row_tracked(s) for s in rewrite_segs
         )
-    segments = list(carried) + _dv_mark_deleted(table, rewrite_segs, pdf)
+        if rewrite_segs:
+            # the same rename/cast/union path a read uses, so the match
+            # sees CURRENT column names/types and (DV-aware) never
+            # resurrects a row a deletion vector removed. Rewritten rows
+            # keep their row ids and commit versions.
+            cand = _read_segments(
+                spark,
+                table,
+                {**manifest, "segments": rewrite_segs},
+                with_row_ids=tracked,
+                with_commit_versions=tracked,
+            )
+            # no broadcast hint on the merge join: a CDC batch is small
+            # and AQE broadcasts it; a backfill must be able to sort-merge
+            joined = _join(cand, "left") if keyed else cand
+            matched = (
+                F.col("__m").isNotNull()
+                if keyed
+                else F.coalesce(spec.match, F.lit(False))
+            )
+            by_source = (
+                spec.by_source if isinstance(spec.by_source, dict) else {}
+            )
+            cols = []
+            for f in target.fields:
+                # an evolving merge's NEW column has no value in old rows
+                expr = (
+                    F.col(f.name).cast(f.dataType)
+                    if f.name in cand.columns
+                    else F.lit(None).cast(f.dataType)
+                )
+                if f.name in sets:
+                    expr = F.when(
+                        matched, sets[f.name].cast(f.dataType)
+                    ).otherwise(expr)
+                if f.name in by_source:
+                    expr = F.when(
+                        ~matched, by_source[f.name].cast(f.dataType)
+                    ).otherwise(expr)
+                cols.append(expr.alias(f.name))
+            if tracked:
+                # updated rows are the SAME logical rows: they keep their
+                # ids (the keyed CDC diff reports value changes), but the
+                # commit version resets (NULL → the fresh segment's cv at
+                # read) wherever values may change: every row under a
+                # by-source update, else the matched rows that survive
+                if by_source:
+                    modified = F.lit(True)
+                else:
+                    modified = matched if keyed else matched & ~drop
+                cols.append(F.col(ROW_ID_COL))
+                cols.append(
+                    F.when(modified, F.lit(None).cast("long"))
+                    .otherwise(F.col(ROW_CV_COL))
+                    .alias(ROW_CV_COL)
+                )
+            survives = ~(matched & drop)
+            if spec.by_source == "delete":
+                survives = survives & matched
+            parts.append(joined.filter(survives).select(*cols))
+
+    ident = manifest.get("identity", {})
+    identity_update = None
+    n_ins = 0
+    ins_obs = None
+    fixed = list(parts)  # what a restage writes again unchanged
+    if spec.inserts is not None:
+        raw = spec.inserts
+        if keyed and rewrite_segs:
+            # carried files provably hold no source key (prune contract),
+            # so the candidates ARE the key universe; with NO candidates
+            # the merge is pure insert and skips the join (an RDD-backed
+            # empty probe keeps a vestigial SortMergeJoin; r14, §2.4)
+            raw = raw.join(cand.select(*spec.keys), spec.keys, "left_anti")
+        dflt = manifest.get("defaults", {})
+
+        def insert_rows(rows: DataFrame) -> DataFrame:
+            # write-default: a NEW row omitting a defaulted column gets
+            # the declared constant, as the append path reads it back
+            cols = [
+                (
+                    F.col(f.name).cast(f.dataType)
+                    if f.name in rows.columns
+                    else F.lit(dflt.get(f.name)).cast(f.dataType)
+                ).alias(f.name)
+                for f in target.fields
+            ]
+            if tracked:
+                # NEW rows: NULL id, the rewrite mints metadata bases
+                cols.append(F.lit(None).cast("long").alias(ROW_ID_COL))
+                cols.append(F.lit(None).cast("long").alias(ROW_CV_COL))
+            return rows.select(*cols)
+
+        def mint(marks: dict):
+            # not-matched inserts mint CONTIGUOUS ids from the high-water
+            # marks (the base's, or a racing append's on restage)
+            rows, update, n = raw, {}, 0
+            for name, col in sorted(ident.items()):
+                col = {**col, "high": marks.get(name, col)["high"]}
+                rows, n = _assign_identity(rows, name, col)
+                update[name] = (col["high"], col["high"] + n * col["step"])
+            return rows, update, n
+
+        if ident:
+            ins, identity_update, n_ins = mint(ident)
+            if n_ins:
+                parts.append(insert_rows(ins))
+            else:
+                identity_update = None  # zero inserts: nothing minted
+        else:
+            ins = insert_rows(raw)
+            if dv:
+                # no pre-count job (r14): the insert count rides the write
+                ins_obs = Observation()
+                ins = ins.observe(ins_obs, F.count(F.lit(1)).alias("__i"))
+            parts.append(ins)
+
+    n_upd = n_matched - n_del if spec.sets is not None else 0
+    # a deletion-vector segment is matched+inserted-rows sized (small by
+    # the position cap): a handful of files, not one per scan task
+    bound = n_upd + (spec.nk if ins_obs is not None else n_ins)
+    fresh_files = max(1, min(bound // 500_000 + 1, 8)) if dv else None
+
+    def write(frames: "list[DataFrame]") -> dict:
+        rows = frames[0]
+        for p in frames[1:]:
+            rows = rows.unionByName(p)
+        return _rewrite_segment(
+            spark,
+            table,
+            manifest,
+            rewrite_segs,
+            rows,
+            schema=spec.schema,
+            # a delete or update cannot alter other columns; inserts and
+            # merges may alter any
+            changed_cols=(
+                None if keyed or spec.inserts is not None else set(sets)
+            ),
+            target_files=fresh_files,
+            may_mint=tracked and spec.inserts is not None,
+        )
+
+    fresh = []
+    if parts:
+        seg = write(parts)
+        if ins_obs is not None:
+            n_ins = int(ins_obs.get["__i"] or 0)
+        if seg["files"]:
+            fresh.append(seg)
+    minted = None
+    if identity_update:
+
+        def restage(latest_ident: dict):
+            # a carried append advanced the mark: re-mint the insert ids
+            # from the NEW high and re-stage ONLY the fresh segment (same
+            # rows, shifted ids); carried and vectored segments stay
+            ins2, update, _n = mint(latest_ident)
+            return segments + [write(fixed + [insert_rows(ins2)])], update
+
+        minted = (identity_update, restage)
+
+    counts = {
+        "rows_matched": n_matched,
+        "rows_deleted": n_del,
+        "rows_updated": n_upd,
+        "rows_inserted": n_ins,
+    }
     return _commit_rewrite(
         table,
         base,
         manifest,
-        segments,
-        "delete_dv",
-        rebase=_blind_rebase(isolation),
-        metrics={"rows_deleted": n},
+        segments + fresh,
+        f"{spec.verb}_dv" if dv else spec.verb,
+        extra=spec.extra,
+        schema=spec.schema,
+        rebase=spec.rebase,
+        minted=minted,
+        metrics={k: counts[k] for k in _DV_METRICS[spec.verb]} if dv else None,
     )
 
 
@@ -3295,12 +3554,13 @@ def _dv_positions_pdf(hits: DataFrame):
     frame — ONE job, no checkpoint, no pre-count (r14: the count used to
     be a second pass over the candidate scan). Returns None when the
     transfer trips ``spark.driver.maxResultSize`` so DV callers can bail
-    to copy-on-write the way an over-cap count did."""
+    to copy-on-write the way an over-cap count did. Spark has no error
+    class for that overflow, so the conf name in the message is the
+    marker; every other failure propagates."""
     try:
         return hits.toPandas()
     except Exception as e:  # noqa: BLE001 — py4j surfaces SparkException
-        msg = str(e)
-        if "maxResultSize" in msg or "bigger than" in msg:
+        if "maxResultSize" in str(e):
             return None
         raise
 
@@ -3313,8 +3573,8 @@ def _dv_mark_deleted(
     Row-object form is GBs of driver heap; the pandas frame is two flat
     columns, ~80 MB) into each file's cumulative vector, persist ONE new
     sidecar, and return the candidate segments with updated ``dvs``
-    entries — same files, new metadata. The shared tail of merge-on-read
-    DELETE and UPDATE."""
+    entries — same files, new metadata. The vector stage of every
+    merge-on-read DELETE, UPDATE and MERGE (:func:`_run_dml`)."""
     base_to_rel = {
         os.path.basename(f): f
         for seg in rewrite_segs
@@ -3346,100 +3606,6 @@ def _dv_mark_deleted(
                 dvs[rel] = {"ref": ref, "n": len(merged[rel])}
         out.append({**seg, **({"dvs": dvs} if dvs else {})})
     return out
-
-
-def _update_where_dv(
-    spark: SparkSession,
-    table: str,
-    base: int,
-    manifest: dict,
-    predicate,
-    set_exprs: dict,
-    carried: list[dict],
-    rewrite_segs: list[dict],
-    isolation: str,
-    required: bool,
-) -> "int | None":
-    """Merge-on-read UPDATE — Delta's DV update decomposition in ONE
-    atomic commit: the matched rows' positions join each file's
-    deletion vector (the old values disappear) and the UPDATED rows
-    land as a fresh appended segment. Cost proportional to the MATCHED
-    rows, not the touched files' bytes. Returns the version, or None
-    when ineligible and ``required`` is False; raises when required."""
-    from pyspark.sql.types import StructType
-
-    def bail(reason: str):
-        if required:
-            raise ValueError(
-                f"deletion-vector update on {table} refused: {reason}"
-            )
-        return None
-
-    if manifest.get("unique"):
-        return bail(
-            "table has UNIQUE constraints (the append-side existence "
-            "probe reads raw files and would see deleted keys); use "
-            "strategy='cow'"
-        )
-    if not rewrite_segs:
-        return _commit_rewrite(
-            table, base, manifest, carried, "update_dv",
-            rebase=_blind_rebase(isolation),
-        )
-    target = StructType.fromJson(manifest["schema"])
-    scan = _dv_candidate_scan(spark, table, manifest, rewrite_segs)
-    matched = scan.filter(
-        F.coalesce(predicate, F.lit(False))
-    ).localCheckpoint(eager=False)
-    # the checkpoint pin stays (the updated-rows write below re-reads
-    # `matched`), but the position pull now doubles as the count — one
-    # job materializes the checkpoint AND collects positions (r14; was a
-    # count job plus a separate toPandas job)
-    pdf = _dv_positions_pdf(matched.select("__dvb", "__dvp"))
-    if pdf is None:
-        return bail(
-            "matching positions exceed spark.driver.maxResultSize; a "
-            "copy-on-write rewrite is the better plan"
-        )
-    n = len(pdf)
-    if n > DV_MAX_POSITIONS:
-        return bail(
-            f"{n} matching rows exceed DV_MAX_POSITIONS "
-            f"({DV_MAX_POSITIONS}); a copy-on-write rewrite is the "
-            "better plan"
-        )
-    segments = list(carried) + _dv_mark_deleted(table, rewrite_segs, pdf)
-    if n:
-        cols = []
-        for f in target.fields:
-            if f.name in set_exprs:
-                v = set_exprs[f.name]
-                expr = v if isinstance(v, Column) else F.lit(v)
-                cols.append(expr.cast(f.dataType).alias(f.name))
-            else:
-                cols.append(F.col(f.name))
-        updated = matched.select(*cols)
-        # the updated-rows segment is matched-rows-sized (small by the
-        # position cap) — a handful of files, not one per scan task
-        new_segment = _rewrite_segment(
-            spark,
-            table,
-            manifest,
-            rewrite_segs,
-            updated,
-            changed_cols=set(set_exprs),
-            target_files=max(1, min(n // 500_000 + 1, 8)),
-        )
-        segments.append(new_segment)
-    return _commit_rewrite(
-        table,
-        base,
-        manifest,
-        segments,
-        "update_dv",
-        rebase=_blind_rebase(isolation),
-        metrics={"rows_updated": n},
-    )
 
 
 def _blind_rebase(isolation: str):
@@ -3483,14 +3649,7 @@ def replace_where(
     SQL NULL semantics: NULL-predicate rows are kept. The change feed
     sees honest delete+insert pairs; time travel still reads the
     pre-replace state."""
-    from pyspark.sql.types import StructType
-
-    base = _read_pointer(table)
-    if base is None:
-        raise FileNotFoundError(f"no committed version in {table}")
-    # ROOT manifest: rewrites touch detail sidecars only for segments
-    # the predicate can reach; everything else carries as heads
-    manifest = _read_manifest_root(table, base)
+    base, manifest = _dml_base(table)
     if manifest.get("identity"):
         raise ValueError(
             f"{table} has IDENTITY column(s) "
@@ -3498,8 +3657,6 @@ def replace_where(
             "rows verbatim, which would bypass GENERATED ALWAYS "
             "assignment — use merge_into or delete+append instead"
         )
-    aliases = manifest.get("aliases", {})
-    target = StructType.fromJson(manifest["schema"])
     bad = df.filter(~F.coalesce(predicate, F.lit(False))).limit(1).collect()
     if bad:
         raise ValueError(
@@ -3507,52 +3664,14 @@ def replace_where(
             f"predicate (first: {bad[0].asDict()}); the replacement for a "
             f"slice must stay inside that slice"
         )
-    carried, rewrite_segs = _split_for_rewrite(
-        manifest, aliases, prune, None, table=table
-    )
-    tracked = bool(rewrite_segs) and all(
-        _seg_row_tracked(s) for s in rewrite_segs
-    )
-    survivors = (
-        _read_segments(
-            spark,
-            table,
-            {**manifest, "segments": rewrite_segs},
-            with_row_ids=tracked,
-            with_commit_versions=tracked,
-        ).filter(~F.coalesce(predicate, F.lit(False)))
-        if rewrite_segs
-        else spark.createDataFrame([], target)
-    )
-    _dflt = manifest.get("defaults", {})
-    ins_cols = [
-        (
-            F.col(f.name).cast(f.dataType)
-            if f.name in df.columns
-            # write-default: a NEW row omitting a defaulted column gets
-            # the declared constant, same as the append path reads back
-            else F.lit(_dflt.get(f.name)).cast(f.dataType)
-        ).alias(f.name)
-        for f in target.fields
-    ]
-    if tracked:
-        # survivors carry their ids; the replacement slice is NEW rows
-        # (fresh identity — its files mint metadata bases)
-        ins_cols.append(F.lit(None).cast("long").alias(ROW_ID_COL))
-        ins_cols.append(F.lit(None).cast("long").alias(ROW_CV_COL))
-    new_rows = survivors.unionByName(df.select(*ins_cols))
-    new_segment = _rewrite_segment(
-        spark, table, manifest, rewrite_segs, new_rows, may_mint=tracked
-    )
-    segments = carried + [new_segment]
-    return _commit_rewrite(
-        table,
-        base,
-        manifest,
-        segments,
+    spec = _DmlSpec(
         "replace",
-        rebase=_blind_rebase(isolation),
+        _blind_rebase(isolation),
+        match=predicate,
+        inserts=df,
+        prune=prune,
     )
+    return _run_dml(spark, table, base, manifest, spec)
 
 
 def _split_for_rewrite(
@@ -3566,8 +3685,9 @@ def _split_for_rewrite(
     whose stats CANNOT intersect ``prune`` (range) / ``point`` (value
     membership vs stats + blooms) carry forward untouched (by reference
     — no read, no write); the rest are rewrite candidates. ``prune=None``
-    with ``point=None`` means rewrite everything. Shared by delete_where
-    / update_where / merge_into — the surgical-rewrite primitive.
+    with ``point=None`` means rewrite everything. The first stage of
+    every DML statement (:func:`_run_dml`) — the surgical-rewrite
+    primitive.
 
     Sharded manifests (``table`` given): a head whose root summary
     excludes the predicate — or that survives per-file pruning fully
@@ -3955,9 +4075,8 @@ def _commit_rewrite(
     extra: dict | None = None,
     schema: dict | None = None,
     rebase=None,
-    identity_update: "dict[str, tuple[int, int]] | None" = None,
+    minted: "tuple[dict[str, tuple[int, int]], Callable] | None" = None,
     metrics: dict | None = None,
-    restage=None,
 ) -> int:
     """Commit a surgical rewrite (delete/update/merge) based on version
     ``base``. ``schema`` overrides the committed table schema (evolving
@@ -3974,14 +4093,16 @@ def _commit_rewrite(
     unprovable (a racing rewrite, schema evolution, a guard miss) still
     raises.
 
-    ``restage`` (minting merges): called when the rebase proof succeeds
-    but a carried commit ADVANCED an identity mark this rewrite minted
-    from — ``restage(latest_identity) -> (segments, identity_update)``
+    ``minted=(identity_update, restage)`` (minting merges):
+    ``identity_update`` maps each IDENTITY column to the (old, new)
+    high-water marks this rewrite minted between. ``restage`` is called
+    when the rebase proof succeeds but a carried commit ADVANCED such a
+    mark — ``restage(latest_identity) -> (segments, identity_update)``
     re-assigns the fresh segment's minted ids from the new mark and
     re-stages ONLY that segment (the write_snapshot restage-on-race
     idiom: ids are baked into staged parquet, so re-linking would
-    duplicate or gap the sequence). Without it a drifted mark is a
-    strict :class:`CommitConflict`."""
+    duplicate or gap the sequence)."""
+    identity_update, restage = minted or (None, None)
     aliases = manifest.get("aliases", {})
     table_schema = schema if schema is not None else manifest["schema"]
     if manifest.get("unique") and rebase is not None:
@@ -4030,12 +4151,6 @@ def _commit_rewrite(
                     if latest_ident.get(c, {}).get("high") != exp
                 ]
                 if drifted:
-                    if restage is None:
-                        raise CommitConflict(
-                            f"concurrent commit to {table} advanced "
-                            f"IDENTITY {drifted} during {mode} (based on "
-                            f"v{base}); minted ids may collide — re-run"
-                        )
                     fresh_segments, identity_update = restage(latest_ident)
                     # the restaged list replaces THIS rewrite's segments
                     # only — appends carried in earlier loop iterations
@@ -4141,401 +4256,28 @@ def update_where(
     rewrite the whole table. The change feed sees the rewrite as
     delete+insert pairs (the honest row-level diff of an update); time
     travel still reads the pre-update state."""
-    from pyspark.sql.types import StructType
-
-    base = _read_pointer(table)
-    if base is None:
-        raise FileNotFoundError(f"no committed version in {table}")
-    # ROOT manifest: rewrites touch detail sidecars only for segments
-    # the predicate can reach; everything else carries as heads
-    manifest = _read_manifest_root(table, base)
-    aliases = manifest.get("aliases", {})
-    target = StructType.fromJson(manifest["schema"])
-    known = {f.name for f in target.fields}
+    base, manifest = _dml_base(table, strategy)
     locked = sorted(set(set_exprs) & set(manifest.get("identity", {})))
     if locked:
         raise ValueError(
             f"IDENTITY column(s) {locked} cannot be UPDATE targets "
             "(GENERATED ALWAYS)"
         )
-    bad = [c for c in set_exprs if c not in known]
+    bad = [c for c in set_exprs if c not in _schema_fields(manifest["schema"])]
     if bad:
         raise ValueError(f"update of unknown column(s): {bad}")
-    if strategy not in ("cow", "dv", "auto"):
-        raise ValueError(
-            f"strategy must be 'cow', 'dv' or 'auto', got {strategy!r}"
-        )
-    carried, rewrite_segs = _split_for_rewrite(
-        manifest, aliases, prune, point, table=table
-    )
-    if strategy in ("dv", "auto"):
-        v = _update_where_dv(
-            spark,
-            table,
-            base,
-            manifest,
-            predicate,
-            set_exprs,
-            carried,
-            rewrite_segs,
-            isolation,
-            required=strategy == "dv",
-        )
-        if v is not None:
-            return v
-    new_segment = None
-    if rewrite_segs:
-        tracked = all(_seg_row_tracked(s) for s in rewrite_segs)
-        part = _read_segments(
-            spark,
-            table,
-            {**manifest, "segments": rewrite_segs},
-            with_row_ids=tracked,
-            with_commit_versions=tracked,
-        )
-        matched = F.coalesce(predicate, F.lit(False))
-        cols = []
-        for f in target.fields:
-            if f.name in set_exprs:
-                v = set_exprs[f.name]
-                expr = v if isinstance(v, Column) else F.lit(v)
-                cols.append(
-                    F.when(matched, expr.cast(f.dataType))
-                    .otherwise(F.col(f.name))
-                    .alias(f.name)
-                )
-            else:
-                cols.append(F.col(f.name))
-        if tracked:
-            # updated rows are the SAME logical rows: they keep their
-            # ids (the keyed CDC diff reports them as value changes) —
-            # but a matched row's VALUES change, so its commit version
-            # resets (NULL → the fresh segment's cv at read)
-            cols.append(F.col(ROW_ID_COL))
-            cols.append(
-                F.when(matched, F.lit(None).cast("long"))
-                .otherwise(F.col(ROW_CV_COL))
-                .alias(ROW_CV_COL)
-            )
-        new_segment = _rewrite_segment(
-            spark,
-            table,
-            manifest,
-            rewrite_segs,
-            part.select(*cols),
-            changed_cols=set(set_exprs),
-        )
-    segments = carried + ([new_segment] if new_segment else [])
-    return _commit_rewrite(
-        table,
-        base,
-        manifest,
-        segments,
+    spec = _DmlSpec(
         "update",
-        rebase=_blind_rebase(isolation),
-    )
-
-
-def _merge_into_dv(
-    spark: SparkSession,
-    table: str,
-    base: int,
-    manifest: dict,
-    carried: list[dict],
-    rewrite_segs: list[dict],
-    src: DataFrame,
-    source: DataFrame,
-    keys: list[str],
-    mapping: dict,
-    delete_when,
-    insert: bool,
-    ident: dict,
-    prune,
-    point,
-    aliases: dict,
-    schema_json: dict,
-    when_not_matched_by_source,
-    extra: dict | None,
-    required: bool,
-    nk_bound: int = 0,
-) -> "int | None":
-    """Merge-on-read MERGE — the deletion-vector decomposition of
-    :func:`merge_into` in ONE atomic commit: matched rows' positions
-    join each file's deletion vector (their old images disappear) and
-    the matched-updates plus not-matched-inserts land as a single fresh
-    segment. Cost O(matched rows + inserts), never O(matched files'
-    bytes) — the CDC-upsert hot path at 100 TB. Shares the candidate
-    scan (:func:`_dv_candidate_scan`), vector tail
-    (:func:`_dv_mark_deleted`) and identity minting with the DV
-    update/delete paths. Returns the version, or None when ineligible
-    and ``required`` is False (auto falls back to CoW); raises when
-    required.
-
-    ``when_matched="keep"`` vectors ONLY ``delete_when`` rows (matched
-    rows stay in place, untouched); any update mapping vectors every
-    matched row and re-emits the survivors with the mapping applied.
-
-    Reference parity: the K3 upsert (reference functions.py:178-183,
-    ``INSERT .. ON CONFLICT DO UPDATE``) — at lake scale, moved to the
-    plan a CDC consumer actually wants."""
-    from pyspark.sql.types import (
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
-    def bail(reason: str):
-        if required:
-            raise ValueError(
-                f"deletion-vector merge into {table} refused: {reason}"
-            )
-        return None
-
-    if manifest.get("unique"):
-        return bail(
-            "table has UNIQUE constraints (the append-side existence "
-            "probe reads raw files and would see deleted keys); use "
-            "strategy='cow'"
-        )
-    if when_not_matched_by_source is not None:
-        return bail(
-            "when_not_matched_by_source quantifies over every file — "
-            "inherently copy-on-write; use strategy='cow'"
-        )
-    # evolving merge: the WIDENED schema is the target; the candidate
-    # scan below normalizes to the pre-merge schema, so new fields
-    # NULL-fill the way any evolved read does
-    target = StructType.fromJson(schema_json)
-    if rewrite_segs:
-        scan = _dv_candidate_scan(spark, table, manifest, rewrite_segs)
-        for f in target.fields:
-            if f.name not in scan.columns:
-                scan = scan.withColumn(
-                    f.name,
-                    F.lit(manifest.get("defaults", {}).get(f.name)).cast(
-                        f.dataType
-                    ),
-                )
-    else:
-        scan = spark.createDataFrame(
-            [],
-            StructType(
-                [
-                    StructField("__dvb", StringType(), True),
-                    StructField("__dvp", LongType(), True),
-                    *target.fields,
-                ]
-            ),
-        )
-    cond = None
-    for k in keys:
-        c = scan[k] == src[f"__s_{k}"]
-        cond = c if cond is None else cond & c
-    joined = scan.join(src, cond, "inner").localCheckpoint(eager=False)
-    # ONE job (r14 perf): the victim-position pull materializes the
-    # checkpoint, and observe() rides the matched/deleted counts on that
-    # same job — r13's fused count agg was still a separate job before
-    # the positions toPandas. The observed metrics are exact (same
-    # aggregate expressions), and the victim filter sits ABOVE the
-    # observe node so the counts cover every matched row while only
-    # victim positions transfer.
-    from pyspark.sql import Observation
-
-    obs = Observation()
-    observed = joined.observe(
-        obs,
-        F.count(F.lit(1)).alias("__m"),
-        F.sum(F.when(F.col("__s_del"), 1).otherwise(0)).alias("__d"),
-    )
-    victims = observed if mapping else observed.filter(F.col("__s_del"))
-    pdf = _dv_positions_pdf(victims.select("__dvb", "__dvp"))
-    if pdf is None:
-        return bail(
-            "matched positions exceed spark.driver.maxResultSize; a "
-            "copy-on-write rewrite is the better plan"
-        )
-    got = obs.get
-    n_matched = got["__m"]
-    n_del = int(got["__d"] or 0) if delete_when is not None else 0
-    n_vic = n_matched if mapping else n_del
-    if n_vic > DV_MAX_POSITIONS:
-        return bail(
-            f"{n_vic} matched rows exceed DV_MAX_POSITIONS "
-            f"({DV_MAX_POSITIONS}); a copy-on-write rewrite is the "
-            "better plan"
-        )
-    segments = list(carried) + (
-        _dv_mark_deleted(table, rewrite_segs, pdf)
-        if n_vic
-        else list(rewrite_segs)
-    )
-
-    new_rows = None
-    n_new = 0
-    if mapping and n_matched - n_del > 0:
-        cols = []
-        for f in target.fields:
-            if f.name in mapping:
-                cols.append(
-                    F.col(f"__s_{mapping[f.name]}").cast(f.dataType).alias(
-                        f.name
-                    )
-                )
-            else:
-                cols.append(F.col(f.name).cast(f.dataType).alias(f.name))
-        # noqa: target fields absent from the scan were NULL-filled above
-        new_rows = joined.filter(~F.col("__s_del")).select(*cols)
-        n_new = n_matched - n_del
-    identity_update = None
-    restage = None
-    upd_part = new_rows  # matched-update rows only (pre-insert union)
-    inserts_raw = None
-    if insert:
-        inserts = source
-        if delete_when is not None:
-            inserts = inserts.filter(~F.coalesce(delete_when, F.lit(False)))
-        # carried files provably hold no source key (prune contract), so
-        # the candidate scan IS the full key universe for the anti-join;
-        # vectored rows are rightly absent (their keys are deleted).
-        # With NO candidate files the merge is pure insert — skip the
-        # join: the empty probe frame is RDD-backed (createDataFrame
-        # of []), so Catalyst cannot fold the vestigial anti-join away
-        # and planned a full SortMergeJoin of the source against the
-        # provably-empty relation (two exchanges + sorts; r14, §2.4).
-        if rewrite_segs:
-            inserts = inserts.join(scan.select(*keys), keys, "left_anti")
-        inserts_raw = inserts  # pre-identity lineage (restage re-mints)
-        n_ins = 0
-        ins_obs = None
-        if ident:
-            identity_update = {}
-            for iname, spec in sorted(ident.items()):
-                inserts, n_ins = _assign_identity(inserts, iname, spec)
-                identity_update[iname] = (
-                    spec["high"],
-                    spec["high"] + n_ins * spec["step"],
-                )
-            if all(e == n_ for e, n_ in identity_update.values()):
-                identity_update = None  # zero inserts: nothing minted
-        else:
-            # r14: no pre-count job — the insert count rides the WRITE
-            # job via observe() (exact; count pre-dates any layout
-            # repartition, so the metric is the row count regardless of
-            # file packing). A zero-insert merge writes an empty staging
-            # dir (dropped file-by-file) instead of paying a count job
-            # to find out, and the fresh-segment file sizing uses the
-            # probe's distinct-key count as the inserts upper bound.
-            ins_obs = Observation()
-        if n_ins or ins_obs is not None:
-            _dflt = manifest.get("defaults", {})
-            ins_cols = [
-                (
-                    F.col(f.name).cast(f.dataType)
-                    if f.name in inserts.columns
-                    # write-default for merge inserts (see replace_where)
-                    else F.lit(_dflt.get(f.name)).cast(f.dataType)
-                ).alias(f.name)
-                for f in target.fields
-            ]
-            ins_rows = inserts.select(*ins_cols)
-            if ins_obs is not None:
-                ins_rows = ins_rows.observe(
-                    ins_obs, F.count(F.lit(1)).alias("__i")
-                )
-            new_rows = (
-                ins_rows if new_rows is None else new_rows.unionByName(ins_rows)
-            )
-            n_new += n_ins
-    if new_rows is not None and (n_new or ins_obs is not None):
-        bound = n_new + (nk_bound if ins_obs is not None else 0)
-        fresh_files = max(1, min(bound // 500_000 + 1, 8))
-        seg_new = _rewrite_segment(
-            spark,
-            table,
-            manifest,
-            rewrite_segs,
-            new_rows,
-            schema=schema_json,
-            target_files=fresh_files,
-        )
-        if ins_obs is not None:
-            n_ins = int(ins_obs.get["__i"] or 0)
-            n_new += n_ins
-        if seg_new["files"]:
-            segments.append(seg_new)
-        if identity_update is not None:
-            segs_base = segments[:-1]
-
-            def _restage_minted(latest_ident):
-                # a carried append advanced the mark: re-mint the insert
-                # ids from the NEW high and re-stage ONLY the fresh
-                # segment (same rows, shifted ids) — the matched-update
-                # part and the carried segments are untouched
-                ins2 = inserts_raw
-                iu = {}
-                for iname, spec0 in sorted(ident.items()):
-                    spec = {
-                        **spec0,
-                        "high": latest_ident.get(iname, spec0)["high"],
-                    }
-                    ins2, n2 = _assign_identity(ins2, iname, spec)
-                    iu[iname] = (
-                        spec["high"],
-                        spec["high"] + n2 * spec["step"],
-                    )
-                cols2 = [
-                    (
-                        F.col(f.name).cast(f.dataType)
-                        if f.name in ins2.columns
-                        else F.lit(None).cast(f.dataType)
-                    ).alias(f.name)
-                    for f in target.fields
-                ]
-                rows2 = ins2.select(*cols2)
-                all2 = (
-                    rows2
-                    if upd_part is None
-                    else upd_part.unionByName(rows2)
-                )
-                seg2 = _rewrite_segment(
-                    spark,
-                    table,
-                    manifest,
-                    rewrite_segs,
-                    all2,
-                    schema=schema_json,
-                    target_files=fresh_files,
-                )
-                return segs_base + [seg2], iu
-
-            restage = _restage_minted
-
-    def _append_commutes(seg: dict) -> bool:
-        # same logical conflict rule as the CoW merge: a concurrent
-        # append commutes only if provably disjoint from the source keys
-        if prune is None and point is None:
-            return False
-        return not _prune_segment_files(seg, aliases, prune, point)
-
-    return _commit_rewrite(
-        table,
-        base,
-        manifest,
-        segments,
-        "merge_dv",
-        extra=extra,
-        schema=schema_json,
-        rebase=_append_commutes,
-        identity_update=identity_update,
-        restage=restage,
-        metrics={
-            "rows_matched": n_matched,
-            "rows_deleted": n_del,
-            "rows_updated": (n_matched - n_del) if mapping else 0,
-            "rows_inserted": n_ins if insert else 0,
+        _blind_rebase(isolation),
+        match=predicate,
+        sets={
+            c: v if isinstance(v, Column) else F.lit(v)
+            for c, v in set_exprs.items()
         },
+        prune=prune,
+        point=point,
     )
+    return _run_dml(spark, table, base, manifest, spec, strategy)
 
 
 def merge_into(
@@ -4593,8 +4335,9 @@ def merge_into(
     carries the previous version's forward) — lineage stamping for CDC
     consumers and index maintainers.
 
-    ``strategy`` picks the physical plan for MATCHED rows (mirrors
-    :func:`delete_where` / :func:`update_where`):
+    ``strategy`` picks the physical plan for MATCHED rows — the same
+    choice, made at the same site, as :func:`delete_where` /
+    :func:`update_where`:
 
     * ``"cow"`` (default) — copy-on-write: every file that might hold a
       matched key is rewritten; cost O(touched files' bytes).
@@ -4621,18 +4364,7 @@ def merge_into(
     (``prune`` is forced to None; passing an explicit prune dict
     raises, because a carried file's unmatched rows would silently
     escape the clause)."""
-    from pyspark.sql.types import StructType
-
-    base = _read_pointer(table)
-    if base is None:
-        raise FileNotFoundError(f"no committed version in {table}")
-    if strategy not in ("cow", "dv", "auto"):
-        raise ValueError(
-            f"strategy must be 'cow', 'dv' or 'auto', got {strategy!r}"
-        )
-    # ROOT manifest: rewrites touch detail sidecars only for segments
-    # the predicate can reach; everything else carries as heads
-    manifest = _read_manifest_root(table, base)
+    base, manifest = _dml_base(table, strategy)
     aliases = manifest.get("aliases", {})
     schema_json = manifest["schema"]
     data_cols = [c for c in source.columns if c not in set(source_meta_cols)]
@@ -4648,8 +4380,7 @@ def merge_into(
         schema_json, _ = _merge_schemas(
             schema_json, src_schema, f"merge into {table}"
         )
-    target = StructType.fromJson(schema_json)
-    tcols = [f.name for f in target.fields]
+    tcols = list(_schema_fields(schema_json))
     # keys must pre-exist in the TABLE schema (evolution adds payload
     # columns, never join keys — a source-only key cannot match anything)
     missing = [
@@ -4780,10 +4511,6 @@ def merge_into(
         if (row["__cnt"] or 0) > nk:
             _dup_raise()
 
-    carried, rewrite_segs = _split_for_rewrite(
-        manifest, aliases, prune, point, table=table
-    )
-
     # source, renamed out of the target namespace, with the delete flag
     # evaluated over the ORIGINAL source row (op-flag columns usable even
     # if the table doesn't have them)
@@ -4798,204 +4525,18 @@ def merge_into(
         del_col.alias("__s_del"),
         F.lit(1).alias("__m"),
     )
-
-    if strategy in ("dv", "auto"):
-        v = _merge_into_dv(
-            spark,
-            table,
-            base,
-            manifest,
-            carried,
-            rewrite_segs,
-            src,
-            source,
-            keys,
-            mapping,
-            delete_when,
-            insert,
-            ident,
-            prune,
-            point,
-            aliases,
-            schema_json,
-            when_not_matched_by_source,
-            extra,
-            required=strategy == "dv",
-            nk_bound=nk,
-        )
-        if v is not None:
-            return v  # DV commit landed (auto fell through otherwise)
-
-    tracked = bool(rewrite_segs) and all(
-        _seg_row_tracked(s) for s in rewrite_segs
-    )
-    part = (
-        _read_segments(
-            spark,
-            table,
-            {**manifest, "segments": rewrite_segs},
-            with_row_ids=tracked,
-            with_commit_versions=tracked,
-        )
-        if rewrite_segs
-        else spark.createDataFrame([], target)
-    )
-    cond = None
-    for k in keys:
-        c = part[k] == src[f"__s_{k}"]
-        cond = c if cond is None else cond & c
-    # no broadcast hint: a CDC batch is small and AQE will broadcast it
-    # on its own; a backfill-sized source must be allowed to sort-merge
-    joined = part.join(src, cond, "left")
-    matched = F.col("__m").isNotNull()
-    out_cols = []
-    for f in target.fields:
-        # an evolving merge's NEW column has no value in the old rows
-        existing = (
-            F.col(f.name).cast(f.dataType)
-            if f.name in part.columns
-            else F.lit(None).cast(f.dataType)
-        )
-        if f.name in mapping:
-            expr = F.when(
-                matched, F.col(f"__s_{mapping[f.name]}").cast(f.dataType)
-            ).otherwise(existing)
-        else:
-            expr = existing
-        if isinstance(when_not_matched_by_source, dict) and (
-            f.name in when_not_matched_by_source
-        ):
-            v = when_not_matched_by_source[f.name]
-            upd = v if isinstance(v, Column) else F.lit(v)
-            expr = F.when(~matched, upd.cast(f.dataType)).otherwise(expr)
-        out_cols.append(expr.alias(f.name))
-    survives = ~(matched & F.col("__s_del"))
-    if when_not_matched_by_source == "delete":
-        survives = survives & matched
-    if tracked:
-        # matched updates and unmatched carries are the same logical
-        # rows — both keep their ids through the rewrite; commit
-        # version resets wherever the merge SET values (matched rows,
-        # plus every carried row when a by-source UPDATE dict applies)
-        out_cols.append(F.col(ROW_ID_COL))
-        modified = (
-            F.lit(True)
-            if isinstance(when_not_matched_by_source, dict)
-            else matched
-        )
-        out_cols.append(
-            F.when(modified, F.lit(None).cast("long"))
-            .otherwise(F.col(ROW_CV_COL))
-            .alias(ROW_CV_COL)
-        )
-    rewritten = joined.filter(survives).select(*out_cols)
-
-    new_rows = rewritten
-    identity_update = None
-    restage = None
-    inserts_raw = None
+    inserts = None
     if insert:
-        inserts = source
-        if delete_when is not None:
-            inserts = inserts.filter(~F.coalesce(delete_when, F.lit(False)))
-        # with NO candidate files the merge is pure insert: the prune
-        # contract proves no file holds a source key, and the empty
-        # probe frame is RDD-backed, so Catalyst cannot fold the
-        # vestigial anti-join away (measured: SortMergeJoin LeftAnti of
-        # the whole source, two exchanges + sorts; r14, guide §2.4)
-        if rewrite_segs:
-            inserts = inserts.join(part.select(*keys), keys, "left_anti")
-        inserts_raw = inserts  # pre-identity lineage (restage re-mints)
-        if ident:
-            # the hard part of IDENTITY: not-matched inserts mint fresh
-            # CONTIGUOUS ids from the table's high-water mark; matched
-            # rows keep theirs (they ride `rewritten` untouched). A
-            # concurrent commit that advanced the mark RESTAGES the
-            # fresh segment from the new mark (see _commit_rewrite);
-            # anything unprovable still conflicts and the caller
-            # re-runs, exactly like a UNIQUE-gated merge.
-            identity_update = {}
-            for iname, spec in sorted(ident.items()):
-                inserts, n = _assign_identity(inserts, iname, spec)
-                identity_update[iname] = (
-                    spec["high"],
-                    spec["high"] + n * spec["step"],
-                )
-            if all(e == n_ for e, n_ in identity_update.values()):
-                identity_update = None  # zero inserts: nothing minted
-        _dflt = manifest.get("defaults", {})
-        ins_cols = [
-            (
-                F.col(f.name).cast(f.dataType)
-                if f.name in inserts.columns
-                # write-default for merge inserts (see replace_where)
-                else F.lit(_dflt.get(f.name)).cast(f.dataType)
-            ).alias(f.name)
-            for f in target.fields
-        ]
-        if tracked:
-            # not-matched inserts are NEW rows: NULL id here, the
-            # rewrite splits them into metadata-minting files
-            ins_cols.append(F.lit(None).cast("long").alias(ROW_ID_COL))
-            ins_cols.append(F.lit(None).cast("long").alias(ROW_CV_COL))
-        # pure-insert merge (no candidate files): nothing was rewritten,
-        # so don't union the RDD-empty rewrite side into the write plan
-        new_rows = (
-            inserts.select(*ins_cols)
-            if not rewrite_segs
-            else rewritten.unionByName(inserts.select(*ins_cols))
+        inserts = (
+            source
+            if delete_when is None
+            else source.filter(~F.coalesce(delete_when, F.lit(False)))
         )
-
-    new_segment = _rewrite_segment(
-        spark,
-        table,
-        manifest,
-        rewrite_segs,
-        new_rows,
-        schema=schema_json,
-        may_mint=tracked and bool(insert),
-    )
-    segments = carried + [new_segment]
-    if identity_update is not None:
-
-        def _restage_minted(latest_ident):
-            # re-mint the not-matched inserts from the advanced mark and
-            # re-stage only this merge's fresh segment (same rows,
-            # shifted ids); matched rewrites and carried segments ride
-            ins2 = inserts_raw
-            iu = {}
-            for iname, spec0 in sorted(ident.items()):
-                spec = {
-                    **spec0,
-                    "high": latest_ident.get(iname, spec0)["high"],
-                }
-                ins2, n2 = _assign_identity(ins2, iname, spec)
-                iu[iname] = (spec["high"], spec["high"] + n2 * spec["step"])
-            cols2 = [
-                (
-                    F.col(f.name).cast(f.dataType)
-                    if f.name in ins2.columns
-                    else F.lit(None).cast(f.dataType)
-                ).alias(f.name)
-                for f in target.fields
-            ]
-            if tracked:
-                cols2.append(F.lit(None).cast("long").alias(ROW_ID_COL))
-                cols2.append(F.lit(None).cast("long").alias(ROW_CV_COL))
-            seg2 = _rewrite_segment(
-                spark,
-                table,
-                manifest,
-                rewrite_segs,
-                ins2.select(*cols2)
-                if not rewrite_segs
-                else rewritten.unionByName(ins2.select(*cols2)),
-                schema=schema_json,
-                may_mint=tracked,
-            )
-            return carried + [seg2], iu
-
-        restage = _restage_minted
+    if isinstance(when_not_matched_by_source, dict):
+        when_not_matched_by_source = {
+            c: v if isinstance(v, Column) else F.lit(v)
+            for c, v in when_not_matched_by_source.items()
+        }
 
     def _append_commutes(seg: dict) -> bool:
         # Delta-style logical conflict detection: a concurrent append
@@ -5010,11 +4551,21 @@ def merge_into(
             return False
         return not _prune_segment_files(seg, aliases, prune, point)
 
-    return _commit_rewrite(
-        table, base, manifest, segments, "merge", extra=extra,
-        schema=schema_json, rebase=_append_commutes,
-        identity_update=identity_update, restage=restage
+    spec = _DmlSpec(
+        "merge",
+        _append_commutes,
+        src=src,
+        keys=keys,
+        sets={t: F.col(f"__s_{c}") for t, c in mapping.items()} or None,
+        inserts=inserts,
+        by_source=when_not_matched_by_source,
+        prune=prune,
+        point=point,
+        schema=schema_json,
+        extra=extra,
+        nk=nk,
     )
+    return _run_dml(spark, table, base, manifest, spec, strategy)
 
 
 #: Commit modes whose rewrites PRESERVE row lineage (carried rows

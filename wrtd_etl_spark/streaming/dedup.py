@@ -78,12 +78,19 @@ def state_partitions_for(spark: SparkSession, *paths: str) -> int:
     env = os.environ.get("SPARK_GRAFT_STATE_PARTITIONS")
     if env:
         return int(env)
-    nbytes = 0
-    for p in paths:
+
+    def size(path: str) -> int:
+        # a directory source (a parquet dataset) is the sum of its files;
+        # getsize() of the directory itself is its inode size (~4 KB)
         try:
-            nbytes += os.path.getsize(p)
+            if not os.path.isdir(path):
+                return os.path.getsize(path)
+            with os.scandir(path) as entries:
+                return sum(size(e.path) for e in entries)
         except OSError:
-            pass
+            return 0
+
+    nbytes = sum(size(p) for p in paths)
     per = 64 * 1024 * 1024
     return max(
         2,

@@ -24,26 +24,6 @@ from pyspark.sql import functions as F
 OUT_SCHEMA = "user_id long, ts timestamp_ntz, alert_rank int"
 
 
-def _keep_chain(pdf: pd.DataFrame, window_s: float) -> pd.DataFrame:
-    """Sequential suppression scan for one key (sorted by ts).
-
-    Retained as the single-group reference implementation (used by the
-    property tests as the truth model for :func:`suppress_alerts`)."""
-    pdf = pdf.sort_values("ts")
-    kept_ts = []
-    kept_idx = []
-    last = None
-    for idx, t in zip(pdf.index, pdf["ts"]):
-        if last is None or (t - last).total_seconds() >= window_s:
-            kept_idx.append(idx)
-            kept_ts.append(t)
-            last = t
-    out = pdf.loc[kept_idx, ["user_id", "ts"]].copy()
-    out["alert_rank"] = range(1, len(kept_idx) + 1)
-    out["alert_rank"] = out["alert_rank"].astype("int32")
-    return out
-
-
 def suppress_alerts(
     events: DataFrame,
     hours: float = 8.0,
