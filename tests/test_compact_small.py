@@ -132,6 +132,34 @@ def test_small_compact_rebases_over_concurrent_append(
     assert len(got) == 5000 + 4 + 1
 
 
+def test_small_compact_keeps_properties_set_during_rewrite(
+    spark, tmp_path, monkeypatch
+):
+    """ALTER ... SET TBLPROPERTIES commits as a zero-segment append, so a
+    rewrite rebases over it; the rebased commit must carry the new
+    properties forward instead of restoring its base's."""
+    import wrtd_etl_spark.sources.versioned as V
+
+    t = str(tmp_path / "tbl")
+    for i in range(3):
+        write_snapshot(
+            spark.createDataFrame([(i, "a")], "k long, v string").coalesce(1),
+            t,
+            mode="append" if i else "overwrite",
+        )
+    real = V._rewrite_segment
+
+    def hooked(*a, **k):
+        out = real(*a, **k)
+        V.set_table_properties(t, {"owner": "ops"})
+        return out
+
+    monkeypatch.setattr(V, "_rewrite_segment", hooked)
+    assert compact_small_files(spark, t) is not None
+    assert manifest_info(t)["mode"] == "compact"
+    assert V.table_properties(t)["owner"] == "ops"
+
+
 def test_sink_inline_incremental_compaction(spark, tmp_path):
     """The streaming append sink's auto-compaction can bin-pack instead
     of rewriting the table."""

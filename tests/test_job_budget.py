@@ -23,8 +23,11 @@ from pyspark.sql import functions as F
 
 from wrtd_etl_spark.sources.versioned import (
     add_unique_constraint,
+    compact,
     delete_where,
+    history,
     merge_into,
+    reorg_purge,
     replace_where,
     update_where,
     write_snapshot,
@@ -168,6 +171,15 @@ def test_update_delete_job_budget(spark, base, tmp_path):
         )
         <= 3
     )
+    # maintenance on the same table: REORG PURGE of a fresh DV delete
+    # (replace_where above rewrote the vectored files), then a full
+    # OPTIMIZE, each recording Delta's OPTIMIZE operationMetrics
+    delete_where(spark, t, F.col("k") % 121 == 0, strategy="dv")
+    optimize_metrics = {"numRemovedFiles", "numAddedFiles"}
+    assert _count_jobs(spark, lambda: reorg_purge(spark, t)) <= 2
+    assert optimize_metrics <= set(history(t)[0]["metrics"])
+    assert _count_jobs(spark, lambda: compact(spark, t, target_files=1)) <= 1
+    assert optimize_metrics <= set(history(t)[0]["metrics"])
 
 
 def test_pure_insert_merge_job_budget(spark, base, tmp_path):

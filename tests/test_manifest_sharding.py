@@ -359,6 +359,15 @@ def test_bloom_budget_folds_then_drops(spark, tmp_path, monkeypatch):
     assert any("bloom byte budget" in str(x.message) for x in w)
     assert describe_table(t3)["bloom_bytes"] == 0
     assert read_snapshot(spark, t3).count() == 2000
+    # a full compact replaces every sketch it re-blooms: only the blooms
+    # the new version carries count against the budget, so t1's one
+    # compacted sketch stays full size (2000 keys, unfolded) instead of
+    # folding against the sketches it replaces
+    from wrtd_etl_spark.sources.bloom import size_bits
+
+    monkeypatch.setattr(V, "BLOOM_BUDGET_BYTES", full * 3 // 2)
+    V.compact(spark, t1)
+    assert describe_table(t1)["bloom_bytes"] == size_bits(2000) // 8
 
 
 def test_rewrite_carries_heads_for_untouched_segments(spark, tmp_path):

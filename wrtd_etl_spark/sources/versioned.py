@@ -318,17 +318,12 @@ def _shard_manifest(table: str, manifest: dict) -> dict:
     """The compact root for serialization: every full segment becomes a
     head whose detail was just written; segments already carried as
     heads pass through untouched (the O(1)-per-old-segment append path).
-    The flat ``files`` list is derivable and therefore dropped."""
-    segs = manifest.get("segments")
-    if segs is None:
-        return manifest
+    The flat ``files`` list never reaches here (see ``_NOT_CARRIED``)."""
     heads = [
         s if _is_seg_head(s) else _write_seg_detail(table, s)
-        for s in segs
+        for s in manifest["segments"]
     ]
-    root = {k: v for k, v in manifest.items() if k != "files"}
-    root["segments"] = heads
-    return root
+    return {**manifest, "segments": heads}
 
 
 def _segments(manifest: dict) -> list[dict]:
@@ -394,6 +389,71 @@ def _try_commit(table: str, version: int, manifest: dict) -> bool:
     os.remove(tmp)
     _advance_pointer(table, version)
     return True
+
+
+#: What a version-0 commit starts from. Every later commit starts from its
+#: parent's root instead (Delta's rule: a commit is a set of changes to the
+#: previous snapshot, and table metadata carries over unless one changes it).
+_ROOT_DEFAULTS = {
+    "segments": [],
+    "schema": None,
+    "schema_evolved": False,
+    "aliases": {},
+    "layout": None,
+    "constraints": {},
+    "generated": {},
+    "unique": {},
+    "identity": {},
+    "defaults": {},
+    "row_high": 0,
+    "props": {},
+    "extra": {},
+}
+#: Root keys that never carry: ``metrics`` describe exactly one commit, and
+#: the flat ``files``/``file_stats`` are the legacy form of ``segments``.
+_NOT_CARRIED = ("metrics", "files", "file_stats")
+
+
+def _carried_root(root: dict) -> dict:
+    """``root`` as the starting point of a new commit: defaults filled in,
+    a legacy flat file list folded into its segment, per-commit keys
+    dropped."""
+    out = {**_ROOT_DEFAULTS, **root, "segments": _segments(root)}
+    for k in _NOT_CARRIED:
+        out.pop(k, None)
+    return out
+
+
+def _commit(table: str, changes: Callable, lost: str) -> "int | None":
+    """The one optimistic commit loop: read the latest root, ask
+    ``changes(prev, base)`` for the fields this commit sets (``prev`` is
+    the parent version or None, ``base`` its :func:`_carried_root`), and
+    put-if-absent ``{**base, **changes}`` as the next version; a lost link
+    race re-reads and asks again. ``changes`` may raise to refuse (e.g. a
+    conflict it cannot rebase) or return None when there is nothing to
+    commit. Raises :class:`CommitConflict` with ``lost`` after 20 lost
+    races."""
+    for _ in range(20):
+        prev = _read_pointer(table)
+        base = (
+            dict(_ROOT_DEFAULTS)
+            if prev is None
+            else _carried_root(_read_manifest_root(table, prev))
+        )
+        upd = changes(prev, base)
+        if upd is None:
+            return None
+        version = 0 if prev is None else prev + 1
+        manifest = {
+            **base,
+            **upd,
+            "version": version,
+            "parent": prev,
+            "committed_at": time.time(),
+        }
+        if _try_commit(table, version, manifest):
+            return version
+    raise CommitConflict(lost)
 
 
 def latest_version(table: str) -> int | None:
@@ -761,17 +821,22 @@ def _table_bloom_bytes(table: str, version: "int | None" = None) -> int:
         version = _read_pointer(table)
     if version is None:
         return 0
-    total = 0
-    for seg in _segments(_read_manifest_root(table, version)):
-        if _is_seg_head(seg):
-            total += seg.get("bloom_bytes", 0)
-        else:
-            total += sum(
-                int(b["m"]) // 8
-                for fb in seg.get("blooms", {}).values()
-                for b in fb.values()
-            )
-    return total
+    return sum(
+        _seg_bloom_bytes(s)
+        for s in _segments(_read_manifest_root(table, version))
+    )
+
+
+def _seg_bloom_bytes(seg: dict) -> int:
+    """Bloom bytes of one segment: a head records its total; an inline
+    (resolved) segment carries the sketches themselves."""
+    if _is_seg_head(seg):
+        return seg.get("bloom_bytes", 0)
+    return sum(
+        int(b["m"]) // 8
+        for fb in seg.get("blooms", {}).values()
+        for b in fb.values()
+    )
 
 
 def _enforce_bloom_budget(
@@ -2190,19 +2255,17 @@ def _commit_new_segment(
     new_segment = _write_seg_detail(table, new_segment)
 
     gated = {**constraints, **_generated_as_constraints(generated)}
-    for _ in range(20):
-        prev = _read_pointer(table)
-        version = 0 if prev is None else prev + 1
-        base = _read_manifest_root(table, prev) if prev is not None else {}
-        uniq = base.get("unique", {})
+
+    def attempt(prev: "int | None", base: dict) -> dict:
+        nonlocal constraints, generated
+        uniq = base["unique"]
         if prev is not None:
             # constraints/generated are re-read per attempt (like
             # `unique`): a retry that stamped the pre-race dicts would
             # silently ERASE a concurrently-added constraint from every
             # future version. Any entries the original gate didn't cover
             # are gated now over the staged files, fail-closed.
-            cur_c = base.get("constraints", {})
-            cur_g = base.get("generated", {})
+            cur_c, cur_g = base["constraints"], base["generated"]
             if cur_c != constraints or cur_g != generated:
                 regate = {
                     name: expr
@@ -2218,7 +2281,7 @@ def _commit_new_segment(
                     )
                     gated.update(regate)
                 constraints, generated = cur_c, cur_g
-        ident_cur = base.get("identity", {}) if prev is not None else {}
+        ident_cur = base["identity"]
         if identity_update is not None:
             # the ids in the staged files were minted from the high
             # marks recorded here; any drift means another writer
@@ -2253,11 +2316,8 @@ def _commit_new_segment(
                 uniq_probed,
             )
         if mode == "append" and prev is not None:
-            prev_manifest = base
-            aliases = _compose_aliases(
-                prev_manifest.get("aliases", {}), renames or {}
-            )
-            prev_schema = prev_manifest["schema"]
+            aliases = _compose_aliases(base["aliases"], renames or {})
+            prev_schema = base["schema"]
             if renames:
                 missing = [
                     o
@@ -2278,9 +2338,7 @@ def _commit_new_segment(
                 refs = [
                     (cname, old)
                     for old in renames
-                    for cname, expr in prev_manifest.get(
-                        "constraints", {}
-                    ).items()
+                    for cname, expr in base["constraints"].items()
                     if _re.search(rf"\b{_re.escape(old)}\b", expr)
                 ]
                 if refs:
@@ -2291,9 +2349,7 @@ def _commit_new_segment(
                     )
                 uholders = sorted(
                     cname
-                    for cname, ucols in prev_manifest.get(
-                        "unique", {}
-                    ).items()
+                    for cname, ucols in base["unique"].items()
                     if any(o in ucols for o in renames)
                 )
                 if uholders:
@@ -2309,9 +2365,7 @@ def _commit_new_segment(
                     {
                         gname
                         for old in renames
-                        for gname, gexpr in prev_manifest.get(
-                            "generated", {}
-                        ).items()
+                        for gname, gexpr in base["generated"].items()
                         if gname == old
                         or _re.search(rf"\b{_re.escape(old)}\b", gexpr)
                     }
@@ -2321,9 +2375,7 @@ def _commit_new_segment(
                         f"cannot rename column(s) referenced by "
                         f"GENERATED column(s) {grefs}; drop them first"
                     )
-                irefs = sorted(
-                    set(renames) & set(prev_manifest.get("identity", {}))
-                )
+                irefs = sorted(set(renames) & set(base["identity"]))
                 if irefs:
                     raise ValueError(
                         f"cannot rename IDENTITY column(s) {irefs}: the "
@@ -2360,15 +2412,13 @@ def _commit_new_segment(
                 prev_schema, df_schema, f"append to {table}"
             )
             evolved = (
-                bool(prev_manifest.get("schema_evolved"))
-                or evolved_now
-                or bool(renames)
+                bool(base["schema_evolved"]) or evolved_now or bool(renames)
             )
-            segments = _segments(prev_manifest) + [new_segment]
+            segments = base["segments"] + [new_segment]
             # layout is a TABLE property (like Delta clustering columns):
             # declaring one on an append updates it, otherwise it carries
             # forward so maintenance always knows what to restore
-            layout = declared_layout or prev_manifest.get("layout")
+            layout = declared_layout or base["layout"]
             if renames and layout and not declared_layout:
                 # the layout spec is a plain column list: it follows the
                 # rename, so maintenance keeps re-clustering the same
@@ -2386,23 +2436,20 @@ def _commit_new_segment(
         # mint the new segment's absolute row base from the CURRENT
         # high-water mark (per attempt: a lost race re-mints from the
         # winner's mark — metadata only, nothing restages)
-        row_high = base.get("row_high", 0) if prev is not None else 0
-        new_segment["row_base"] = row_high
+        new_segment["row_base"] = base["row_high"]
         # the version that set these rows' values — per attempt, like
         # row_base (a lost race re-stamps metadata, never data)
-        new_segment["cv"] = version
-        manifest = {
-            "version": version,
+        new_segment["cv"] = 0 if prev is None else prev + 1
+        # constraints, UNIQUE keys and table properties (maintenance
+        # policy etc.) carry from the base, like Delta TBLPROPERTIES —
+        # they survive every commit incl. overwrite
+        return {
             "mode": mode,
-            "parent": prev,
             "segments": segments,
             "schema": schema,
             "schema_evolved": evolved,
             "aliases": aliases,
             "layout": layout,
-            "constraints": constraints,
-            "generated": generated,
-            "unique": uniq,
             "identity": ident_new,
             # defaults survive any commit whose schema keeps the column
             # (an overwrite that drops it drops the default with it);
@@ -2411,26 +2458,20 @@ def _commit_new_segment(
             # segments read NULL again)
             "defaults": {
                 (renames or {}).get(c, c): dv
-                for c, dv in base.get("defaults", {}).items()
+                for c, dv in base["defaults"].items()
                 if (renames or {}).get(c, c) in _schema_fields(schema)
             },
-            "row_high": row_high + rows_minted,
-            # table properties are table-level config (maintenance
-            # policy etc.) — they survive every commit incl. overwrite,
-            # like Delta TBLPROPERTIES
-            "props": base.get("props", {}),
-            "committed_at": time.time(),
+            "row_high": base["row_high"] + rows_minted,
             "extra": extra or {},
         }
-        # write order IS the crash contract: data files exist, then the
-        # manifest link (THE commit point), then the pointer cache; a
-        # crash before the link leaves the previous version fully intact
-        if _try_commit(table, version, manifest):
-            return version
-        # lost the race: rebase on the new latest and retry (append picks
-        # up the winner's segments; overwrite just takes the next slot)
-    raise CommitConflict(
-        f"could not commit to {table} after 20 attempts"
+
+    # write order IS the crash contract: data files exist, then the
+    # manifest link (THE commit point), then the pointer cache; a crash
+    # before the link leaves the previous version fully intact. A lost
+    # race rebases on the new latest (append picks up the winner's
+    # segments; overwrite just takes the next slot).
+    return _commit(
+        table, attempt, f"could not commit to {table} after 20 attempts"
     )
 
 
@@ -3499,6 +3540,7 @@ def _run_dml(
             table,
             manifest,
             rewrite_segs,
+            segments,
             rows,
             schema=spec.schema,
             # a delete or update cannot alter other columns; inserts and
@@ -3714,49 +3756,39 @@ def _split_for_rewrite(
             carried.append(head)
             continue
         keep = [f for f in seg["files"] if f not in cand]
-
-        def _trim(side: dict, members) -> dict:
-            # row-tracking maps trim with the files: per-file offsets
-            # are SEGMENT-relative and never renumber, so a partial
-            # keep preserves every kept file's (row_base + offset) ids
-            out = {
-                **side,
-                "stats": {
-                    k: v
-                    for k, v in side.get("stats", {}).items()
-                    if k in members
-                },
-            }
-            for extra in ("blooms", "dvs", "rows", "cvs"):
-                if side.get(extra):
-                    sub = {
-                        k: v for k, v in side[extra].items() if k in members
-                    }
-                    if sub:
-                        out[extra] = sub
-                    else:
-                        out.pop(extra, None)
-            if side.get("rid"):
-                rid = [f for f in side["rid"] if f in members]
-                if rid:
-                    out["rid"] = rid
-                else:
-                    out.pop("rid", None)
-            return out
-
         if keep:
             # kept files keep their deletion vectors; replaced files'
             # vectors die with the files
-            carried.append({**_trim(seg, set(keep)), "files": keep})
+            carried.append(_seg_part(seg, keep))
         if cand:
             # The candidate segment must carry ONLY cand-file sidecar
             # state: a stale dv/stat/bloom entry for a file kept by the
             # carried part would be re-persisted by _dv_mark_deleted and
             # could later shadow the owning segment's newer ref.
-            rewrite_segs.append(
-                {**_trim(seg, cand), "files": sorted(cand)}
-            )
+            rewrite_segs.append(_seg_part(seg, sorted(cand)))
     return carried, rewrite_segs
+
+
+def _seg_part(seg: dict, files: list[str]) -> dict:
+    """``seg`` cut down to ``files``: every per-file map (stats, blooms,
+    deletion vectors, row offsets, cv ranges) and the materialized-id
+    list trim with them. Row offsets are SEGMENT-relative and never
+    renumber, so a part preserves every kept file's (row_base + offset)
+    ids."""
+    members = set(files)
+    out = {**seg, "files": files}
+    for key in ("stats", "blooms", "dvs", "rows", "cvs"):
+        sub = {k: v for k, v in seg.get(key, {}).items() if k in members}
+        if sub or key == "stats":
+            out[key] = sub
+        else:
+            out.pop(key, None)
+    rid = [f for f in seg.get("rid", []) if f in members]
+    if rid:
+        out["rid"] = rid
+    else:
+        out.pop("rid", None)
+    return out
 
 
 def _rewrite_segment(
@@ -3764,6 +3796,7 @@ def _rewrite_segment(
     table: str,
     manifest: dict,
     rewrite_segs: list[dict],
+    carried: list[dict],
     rows: DataFrame,
     schema: dict | None = None,
     changed_cols: "set[str] | None" = None,
@@ -3774,7 +3807,9 @@ def _rewrite_segment(
     re-collecting file stats for every column the replaced files had
     stats on (so data skipping keeps working across rewrites).
     ``schema`` overrides the segment's recorded schema (an evolving
-    merge writes the WIDENED schema).
+    merge writes the WIDENED schema). ``carried`` are the other
+    segments the new version keeps; only their blooms count against
+    the bloom budget.
 
     When the table records a clustered layout, the replacement rows are
     re-clustered along it before writing — a merge/update/delete must
@@ -4002,8 +4037,9 @@ def _rewrite_segment(
         blooms = _enforce_bloom_budget(
             table,
             _collect_file_blooms(spark, table, files_new, bloom_cols),
-            # conservative: counts the replaced files' blooms too
-            _table_bloom_bytes(table),
+            # the replaced files' blooms leave with them: a full compact
+            # re-blooms at full size instead of folding its own sketches
+            sum(_seg_bloom_bytes(s) for s in carried),
         )
         if blooms:
             out["blooms"] = blooms
@@ -4030,9 +4066,10 @@ def _rebase_appends(
     """The logical-conflict check behind optimistic rewrites: when every
     commit in (base, prev] is a plain same-schema append, return its new
     segments (to carry into the rebased rewrite) plus the latest
-    manifest (whose ``extra`` — the streaming batch-id ledger — and
-    layout the rebase must adopt, or replayed micro-batches would
-    double-ingest). ``guard(segment) -> bool`` is the mode-specific
+    manifest (a further rebase slices its carry from there; the commit
+    loop adopts that root's ``extra`` — the streaming batch-id ledger,
+    without which replayed micro-batches would double-ingest — layout
+    and properties). ``guard(segment) -> bool`` is the mode-specific
     commutation proof (merge: appended files cannot contain any source
     key); any failure returns None and the caller raises."""
     segs: list[dict] = []
@@ -4078,10 +4115,14 @@ def _commit_rewrite(
     minted: "tuple[dict[str, tuple[int, int]], Callable] | None" = None,
     metrics: dict | None = None,
 ) -> int:
-    """Commit a surgical rewrite (delete/update/merge) based on version
-    ``base``. ``schema`` overrides the committed table schema (evolving
-    merge). ``metrics`` (Delta DESCRIBE HISTORY operationMetrics shape)
-    records row counts the operation already computed — never a new job.
+    """Commit a rewrite (DML or any OPTIMIZE kind) based on version
+    ``base`` through the one :func:`_commit` loop. The rewrite sets only
+    its segments, schema, evolved flag, IDENTITY and row-id marks, and
+    (when given) ``extra`` and ``metrics``; every other table field
+    carries from the latest root. ``schema`` overrides the committed
+    table schema (evolving merge). ``metrics`` (Delta DESCRIBE HISTORY
+    operationMetrics shape) records counts the operation already
+    computed — never a new job.
 
     Concurrency: with ``rebase=None`` a concurrent commit raises —
     strict serializability, the rewrite reflects a superseded snapshot.
@@ -4089,9 +4130,11 @@ def _commit_rewrite(
     Delta-style optimistic protocol applies: if every intervening commit
     is a plain append whose new segments pass the guard, they are
     carried into the rewritten manifest and the commit retries on the
-    new base — concurrent ingest no longer kills maintenance. Anything
-    unprovable (a racing rewrite, schema evolution, a guard miss) still
-    raises.
+    new base — concurrent ingest no longer kills maintenance. A
+    zero-segment append (an ALTER ... SET TBLPROPERTIES) commutes too,
+    and its properties carry like any other root field. Anything
+    unprovable (a racing rewrite, schema evolution, a new constraint, a
+    guard miss) still raises.
 
     ``minted=(identity_update, restage)`` (minting merges):
     ``identity_update`` maps each IDENTITY column to the (old, new)
@@ -4103,7 +4146,6 @@ def _commit_rewrite(
     idiom: ids are baked into staged parquet, so re-linking would
     duplicate or gap the sequence)."""
     identity_update, restage = minted or (None, None)
-    aliases = manifest.get("aliases", {})
     table_schema = schema if schema is not None else manifest["schema"]
     if manifest.get("unique") and rebase is not None:
         # the rewrite's UNIQUE probe covered the files of `base` only;
@@ -4111,18 +4153,15 @@ def _commit_rewrite(
         # replacement rows — strict conflict, caller re-runs on new base
         rebase = None
     evolved = (
-        bool(aliases)
+        bool(manifest.get("aliases"))
         or bool(manifest.get("schema_evolved"))
         or any(s["schema"] != table_schema for s in segments)
     )
-    ident_final = dict(manifest.get("identity", {}))
-    if identity_update is not None:
-        for c, (_exp, new) in identity_update.items():
-            ident_final[c] = {**ident_final.get(c, {}), "high": new}
     carried_appends: list[dict] = []
-    row_high = manifest.get("row_high", 0)
-    for _ in range(20):
-        prev = _read_pointer(table)
+
+    def attempt(prev: int, latest: dict) -> dict:
+        nonlocal base, manifest, segments, identity_update, evolved
+        nonlocal carried_appends
         if prev != base:
             rb = (
                 _rebase_appends(table, base, prev, manifest, rebase)
@@ -4134,7 +4173,7 @@ def _commit_rewrite(
                     f"concurrent commit to {table} during {mode} (based "
                     f"on v{base}); re-run"
                 )
-            carried_segs, latest_m = rb
+            carried_segs, manifest = rb
             if identity_update is not None:
                 # this rewrite MINTED ids from base's high-water mark.
                 # The rebase guard already proved the interleaved commits
@@ -4144,14 +4183,15 @@ def _commit_rewrite(
                 # edge #2), and a drifted mark RESTAGES the fresh
                 # segment from the new mark when the caller supplied the
                 # re-assign hook — never a full merge re-run.
-                latest_ident = latest_m.get("identity", {})
                 drifted = [
                     c
                     for c, (exp, _n) in identity_update.items()
-                    if latest_ident.get(c, {}).get("high") != exp
+                    if latest["identity"].get(c, {}).get("high") != exp
                 ]
                 if drifted:
-                    fresh_segments, identity_update = restage(latest_ident)
+                    fresh_segments, identity_update = restage(
+                        latest["identity"]
+                    )
                     # the restaged list replaces THIS rewrite's segments
                     # only — appends carried in earlier loop iterations
                     # ride along (they live in carried_appends)
@@ -4161,36 +4201,19 @@ def _commit_rewrite(
             evolved = evolved or any(
                 s["schema"] != table_schema for s in carried_segs
             )
-            manifest = {
-                **manifest,
-                # adopt the latest SEGMENTS too: a second rebase
-                # iteration slices its append carry from
-                # len(_segments(base_manifest)) — a stale list would
-                # re-carry this iteration's appends (double rows)
-                "segments": list(_segments(latest_m)),
-                "extra": latest_m.get("extra", {}),
-                "layout": latest_m.get("layout"),
-                "constraints": latest_m.get("constraints", {}),
-                "generated": latest_m.get("generated", {}),
-                "unique": latest_m.get("unique", {}),
-                "defaults": latest_m.get("defaults", {}),
-            }
-            # adopt the appends' advanced high-water marks for columns
-            # this rewrite did NOT mint (they minted ids we must never
-            # reuse), then overlay our own minted marks (non-drifted or
-            # freshly restaged above)
-            ident_final = dict(latest_m.get("identity", {}))
-            if identity_update is not None:
-                for c, (_exp, new) in identity_update.items():
-                    ident_final[c] = {**ident_final.get(c, {}), "high": new}
-            # adopt the interleaved commits' advanced row-id mark (their
-            # appends minted bases this rewrite must never reuse)
-            row_high = latest_m.get("row_high", 0)
             base = prev
+        # the latest root supplies everything this rewrite does not set:
+        # layout, constraints, defaults, properties and the streaming
+        # ledger of any append it rebased over, and the advanced IDENTITY
+        # and row-id marks of those appends (ids this rewrite must never
+        # reuse); our own minted marks overlay them
+        ident = dict(latest["identity"])
+        for c, (_exp, new) in (identity_update or {}).items():
+            ident[c] = {**ident.get(c, {}), "high": new}
         # mint row bases for THIS rewrite's fresh segments per attempt
         # (copies — a retried loop re-mints from the adopted mark, so a
         # lost race can never double-assign an id range)
-        seg_final, row_high_new = _assign_row_bases(segments, row_high)
+        seg_final, row_high = _assign_row_bases(segments, latest["row_high"])
         # stamp the fresh segments' commit version (the _rewrite_segment
         # sentinel) with the version this attempt will take; carried
         # segments keep the cv of the commit that wrote their rows
@@ -4198,30 +4221,23 @@ def _commit_rewrite(
             {**s, "cv": prev + 1} if ("cv" in s and s["cv"] is None) else s
             for s in seg_final
         ]
-        new_manifest = {
-            "version": prev + 1,
+        out = {
             "mode": mode,
-            "parent": prev,
             "segments": seg_final,
             "schema": table_schema,
             "schema_evolved": evolved,
-            "aliases": aliases,
-            "layout": manifest.get("layout"),
-            "constraints": manifest.get("constraints", {}),
-            "generated": manifest.get("generated", {}),
-            "unique": manifest.get("unique", {}),
-            "identity": ident_final,
-            "defaults": manifest.get("defaults", {}),
-            "row_high": row_high_new,
-            "props": manifest.get("props", {}),
-            "committed_at": time.time(),
-            "extra": extra if extra is not None else manifest.get("extra", {}),
+            "identity": ident,
+            "row_high": row_high,
         }
+        if extra is not None:
+            out["extra"] = extra
         if metrics:
-            new_manifest["metrics"] = metrics
-        if _try_commit(table, prev + 1, new_manifest):
-            return prev + 1
-    raise CommitConflict(f"{mode} on {table} kept losing the commit race")
+            out["metrics"] = metrics
+        return out
+
+    return _commit(
+        table, attempt, f"{mode} on {table} kept losing the commit race"
+    )
 
 
 def update_where(
@@ -5439,8 +5455,10 @@ def table_changes_physical(
 def history(table: str) -> list[dict]:
     """Commit log, newest first (version, mode, parent, n_files, ts;
     plus ``metrics`` — Delta's operationMetrics — on commits that
-    recorded row counts: the merge-on-read DML paths, where the counts
-    were already computed for the position cap and cost nothing)."""
+    recorded them: the merge-on-read DML paths, where the row counts
+    were already computed for the position cap, and every OPTIMIZE
+    kind, whose file counts the rewrite already knows; both cost
+    nothing)."""
     latest = _read_pointer(table)
     if latest is None:
         return []
@@ -5476,38 +5494,23 @@ def rollback(table: str, version: int) -> int:
     schema, evolved flag, aliases, extra): restoring an append-evolved
     version must keep the segment read path on, or the evolved columns
     silently vanish."""
-    target = _read_manifest_root(table, version)
-    for _ in range(20):
-        prev = _read_pointer(table)
+    target = _carried_root(_read_manifest_root(table, version))
+
+    def attempt(prev: int, latest: dict) -> dict:
         # IDENTITY and row-id high-water marks never decrease: a RESTORE
         # discards rows, not the promise that minted ids are never
-        # reissued — carry the LATEST marks, not the target's
-        latest_root = _read_manifest_root(table, prev)
-        latest_ident = latest_root.get("identity", {})
-        manifest = {
-            "version": prev + 1,
+        # reissued — carry the LATEST marks, not the target's. Properties
+        # are CONFIG, not data: a restore rewinds rows, not the current
+        # maintenance policy.
+        return {
+            **target,
             "mode": f"rollback:{version}",
-            "parent": prev,
-            "segments": _segments(target),
-            "schema": target["schema"],
-            "schema_evolved": bool(target.get("schema_evolved")),
-            "aliases": target.get("aliases", {}),
-            "layout": target.get("layout"),
-            "constraints": target.get("constraints", {}),
-            "generated": target.get("generated", {}),
-            "unique": target.get("unique", {}),
-            "identity": latest_ident,
-            "defaults": target.get("defaults", {}),
-            "row_high": latest_root.get("row_high", 0),
-            # like the identity mark: properties are CONFIG, not data —
-            # a restore rewinds rows, not the current maintenance policy
-            "props": latest_root.get("props", {}),
-            "committed_at": time.time(),
-            "extra": target.get("extra", {}),
+            **{k: latest[k] for k in ("identity", "row_high", "props")},
         }
-        if _try_commit(table, prev + 1, manifest):
-            return prev + 1
-    raise CommitConflict(f"rollback of {table} kept losing the commit race")
+
+    return _commit(
+        table, attempt, f"rollback of {table} kept losing the commit race"
+    )
 
 
 # table-property keys maybe_compact consults when the caller leaves the
@@ -5587,24 +5590,14 @@ def _commit_props(table: str, updates: dict) -> int:
     consumers (MVs, indexes, the change feed) see an empty advance, not
     a rewrite. Carries segment HEADS from the root: an ALTER on an
     800k-file table rewrites zero detail bytes."""
-    for _ in range(20):
-        prev = _read_pointer(table)
-        m = _read_manifest_root(table, prev)
-        new = {
-            **m,
-            "version": prev + 1,
-            "mode": "append",
-            "parent": prev,
-            **updates,
-            "committed_at": time.time(),
-        }
-        # operation metrics describe exactly ONE commit — never inherited
-        new.pop("metrics", None)
-        if _try_commit(table, prev + 1, new):
-            return prev + 1
-    raise CommitConflict(
-        f"property change on {table} kept losing the commit race"
-    )
+
+    def attempt(prev: "int | None", base: dict) -> dict:
+        if prev is None:
+            raise FileNotFoundError(f"no committed version in {table}")
+        return {"mode": "append", **updates}
+
+    lost = f"property change on {table} kept losing the commit race"
+    return _commit(table, attempt, lost)
 
 
 def add_check_constraint(
@@ -6463,31 +6456,20 @@ def convert_to_versioned(
                     spark, table, g["files"], cols
                 )
         segments.append(seg)
-    manifest = {
-        "version": 0,
-        "mode": "overwrite",
-        "parent": None,
-        "segments": segments,
-        "schema": schema_json,
-        "schema_evolved": evolved or len(groups) > 1,
-        "aliases": {},
-        "layout": None,
-        "constraints": {},
-        "generated": {},
-        "unique": {},
-        "identity": {},
-        "defaults": {},
-        "row_high": 0,
-        "props": {},
-        "committed_at": time.time(),
-        "extra": {
-            "converted_from": "parquet",
-            "adopted_files": len(rels),
-        },
-    }
-    if not _try_commit(table, 0, manifest):
-        raise CommitConflict(f"{table} was converted/created concurrently")
-    return 0
+    lost = f"{table} was converted/created concurrently"
+
+    def attempt(prev: "int | None", base: dict) -> dict:
+        if prev is not None:
+            raise CommitConflict(lost)
+        return {
+            "mode": "overwrite",
+            "segments": segments,
+            "schema": schema_json,
+            "schema_evolved": evolved or len(groups) > 1,
+            "extra": {"converted_from": "parquet", "adopted_files": len(rels)},
+        }
+
+    return _commit(table, attempt, lost)
 
 
 def collect_statistics(
@@ -6520,28 +6502,17 @@ def collect_statistics(
     want_blooms = list(bloom_cols or [])
     if not want_stats and not want_blooms:
         raise ValueError("pass stats_cols and/or bloom_cols to backfill")
-    for _ in range(20):
-        p = _read_pointer(table)
+
+    def attempt(p: "int | None", root: dict) -> "dict | None":
         if p is None:
             raise FileNotFoundError(f"no committed version in {table}")
-        root = _read_manifest_root(table, p)
-        aliases = root.get("aliases", {})
+        aliases = root["aliases"]
         existing_bloom_bytes = sum(
-            s.get("bloom_bytes", 0)
-            if _is_seg_head(s)
-            # inline (non-sharded) segments carry their blooms in the
-            # root — counting them as 0 would let the budget admit new
-            # blooms past the table-wide cap on mixed tables
-            else sum(
-                int(b["m"]) // 8
-                for fb in s.get("blooms", {}).values()
-                for b in fb.values()
-            )
-            for s in _segments(root)
+            _seg_bloom_bytes(s) for s in root["segments"]
         )
         new_segs: list = []
         changed = False
-        for seg in _segments(root):
+        for seg in root["segments"]:
             full = _resolve_seg(table, seg)
             fields = set(_schema_fields(full["schema"]))
 
@@ -6589,11 +6560,7 @@ def collect_statistics(
                         if c not in blooms.setdefault(f, {}):
                             blooms[f][c] = b
                             seg_changed = True
-                existing_bloom_bytes += sum(
-                    int(b["m"]) // 8
-                    for fb in got_b.values()
-                    for b in fb.values()
-                )
+                existing_bloom_bytes += _seg_bloom_bytes({"blooms": got_b})
             if not seg_changed:
                 new_segs.append(seg)  # head carries byte-for-byte
                 continue
@@ -6602,22 +6569,12 @@ def collect_statistics(
             if blooms:
                 full2["blooms"] = blooms
             new_segs.append(_write_seg_detail(table, full2))
-        if not changed:
-            return None
-        manifest = {
-            **root,
-            "version": p + 1,
-            "mode": "append",
-            "parent": p,
-            "segments": new_segs,
-            "committed_at": time.time(),
-        }
-        manifest.pop("metrics", None)
-        manifest.pop("files", None)
-        if _try_commit(table, p + 1, manifest):
-            return p + 1
-    raise CommitConflict(
-        f"statistics backfill on {table} kept losing the commit race"
+        return {"mode": "append", "segments": new_segs} if changed else None
+
+    return _commit(
+        table,
+        attempt,
+        f"statistics backfill on {table} kept losing the commit race",
     )
 
 
@@ -6694,28 +6651,19 @@ def clone_table(
                 os.link(s, d)
             except OSError:  # cross-device (EXDEV) or FS w/o hardlinks
                 shutil.copy2(s, d)
-    manifest = {
-        "version": 0,
-        "mode": "overwrite",
-        "parent": None,
-        "segments": segs,
-        "schema": m["schema"],
-        "schema_evolved": bool(m.get("schema_evolved")),
-        "aliases": m.get("aliases", {}),
-        "layout": m.get("layout"),
-        "constraints": m.get("constraints", {}),
-        "generated": m.get("generated", {}),
-        "unique": m.get("unique", {}),
-        "identity": m.get("identity", {}),
-        "defaults": m.get("defaults", {}),
-        "row_high": m.get("row_high", 0),
-        "props": m.get("props", {}),
-        "committed_at": time.time(),
-        "extra": {"cloned_from": src, "clone_source_version": version},
-    }
-    if not _try_commit(dst, 0, manifest):
-        raise CommitConflict(f"clone target {dst} was created concurrently")
-    return 0
+    lost = f"clone target {dst} was created concurrently"
+
+    def attempt(prev: "int | None", base: dict) -> dict:
+        if prev is not None:
+            raise CommitConflict(lost)
+        return {
+            **_carried_root(m),
+            "mode": "overwrite",
+            "segments": segs,
+            "extra": {"cloned_from": src, "clone_source_version": version},
+        }
+
+    return _commit(dst, attempt, lost)
 
 
 def expire_history(
@@ -6914,7 +6862,6 @@ def compact(
     spark: SparkSession,
     table: str,
     target_files: int = 1,
-    stats_cols: list[str] | None = None,
 ) -> int:
     """OPTIMIZE: rewrite the LATEST version's data into ``target_files``
     coalesced files and commit the rewrite as a new version.
@@ -6926,138 +6873,37 @@ def compact(
     Readers are never disturbed: the rewrite commits through the same
     put-if-absent manifest link, old versions still reference the old
     files (time travel intact), and ``vacuum`` reclaims them once
-    retention allows. A CONCURRENT commit between the snapshot read and
-    the commit raises :class:`CommitConflict` — the rewrite reflects a
-    superseded snapshot and cannot be rebased mechanically; re-run.
+    retention allows.
+
+    Concurrency: the full rewrite is the OPTIMIZE family's widest victim
+    set ("every live file") through the same :func:`_rewrite_victims`
+    tail, so it rebases like the incremental kinds — a concurrent plain
+    append carries into the compacted version untouched, while any other
+    intervening commit (a rewrite, schema evolution, a new constraint)
+    raises :class:`CommitConflict`; re-run.
 
     A table committed with ``layout_by`` RE-CLUSTERS here: the manifest
     records the layout spec, and compaction re-applies the Z-order
-    (bounds recomputed over the current rows) instead of a plain
+    (bounds from the replaced files' stats) instead of a plain
     coalesce — so the unclustered tail the appends accrued folds back
     into narrow-stats files and ``skip_filter`` pruning is RESTORED by
     maintenance rather than destroyed by it. File count comes from the
-    recorded ``layout_files`` (fallback ``target_files``)."""
+    recorded ``layout_files`` (fallback ``target_files``). The stats and
+    bloom surfaces, row ids and commit versions carry like every
+    rewrite's."""
     base = _read_pointer(table)
-    base_manifest = _read_manifest(table, base)
-    # carried rows keep their ids through the compaction (materialized
-    # __row_id column) so the keyed CDC diff cancels the whole rewrite;
-    # a table with pre-tracking segments compacts untracked, preserving
-    # its exceptAll CDC semantics instead of reminting every row
-    tracked = all(
-        _seg_row_tracked(s) for s in _segments(base_manifest)
+    if base is None:
+        raise FileNotFoundError(f"no committed version in {table}")
+    manifest = _read_manifest(table, base)
+    layout = manifest.get("layout") or {}
+    return _rewrite_victims(
+        spark,
+        table,
+        base,
+        manifest,
+        {f for seg in _segments(manifest) for f in seg["files"]},
+        min_files=layout.get("files") or target_files,
     )
-    df = (
-        _read_segments(
-            spark,
-            table,
-            base_manifest,
-            with_row_ids=True,
-            with_commit_versions=True,
-        )
-        if tracked
-        else read_snapshot(spark, table, version=base)
-    )
-    layout = base_manifest.get("layout")
-    if layout and all(c in df.columns for c in layout["by"]):
-        # compaction rewrites the snapshot's own rows unmodified, so the
-        # quantization bounds are exactly the base segments' stats — no
-        # min/max job over the full snapshot (r14, guide §1.2)
-        clustered = _apply_layout(
-            df,
-            layout["by"],
-            layout.get("files") or target_files,
-            strict=False,
-            bounds=_layout_bounds_from_segstats(
-                df, _segments(base_manifest), layout["by"]
-            ),
-        )
-    else:
-        clustered = df.coalesce(target_files)
-    files = _write_data(clustered, table)
-    if stats_cols is None:
-        # inherit the stats surface: compaction must not silently turn
-        # off data skipping the appends paid to record
-        stats_cols = sorted(
-            {
-                c
-                for seg in _segments(base_manifest)
-                for f_stats in seg.get("stats", {}).values()
-                for c in f_stats
-            }
-            | set(layout["by"] if layout else [])
-        )
-    stats = (
-        _collect_file_stats(table, files, stats_cols) if stats_cols else {}
-    )
-    # inherit the bloom surface too — compaction restoring clustering
-    # while silently dropping point-prunability would be half a repair
-    bloom_cols = sorted(
-        {
-            c
-            for seg in _segments(base_manifest)
-            for fb in seg.get("blooms", {}).values()
-            for c in fb
-        }
-    )
-    data_schema = (
-        df.drop(ROW_ID_COL, ROW_CV_COL).schema.jsonValue()
-        if tracked
-        else df.schema.jsonValue()
-    )
-    seg_new = {"files": files, "schema": data_schema, "stats": stats}
-    if tracked:
-        seg_new["rid"] = files  # every file materialized its row ids
-        cvs = _collect_file_cv_stats(table, files)
-        if cvs:
-            # per-file carried-cv ranges: changed_rows_since prunes
-            # inside this compacted segment instead of rescanning it
-            seg_new["cvs"] = cvs
-        seg_new = _attach_row_offsets(seg_new, table)
-        seg_new.pop("rows_minted", None)
-    if bloom_cols:
-        blooms = _enforce_bloom_budget(
-            table,
-            _collect_file_blooms(spark, table, files, bloom_cols),
-            0,  # compact replaces every segment
-        )
-        if blooms:
-            seg_new["blooms"] = blooms
-    version = base + 1
-    manifest = {
-        "version": version,
-        "mode": "compact",
-        "parent": base,
-        "files": files,
-        "segments": [seg_new],
-        "schema": data_schema,
-        # the rewrite materializes ONE uniform (merged) schema, so the
-        # compacted version no longer needs the segment read path even if
-        # its ancestors did
-        "schema_evolved": False,
-        "aliases": {},
-        "layout": layout,
-        "constraints": base_manifest.get("constraints", {}),
-        "generated": base_manifest.get("generated", {}),
-        "unique": base_manifest.get("unique", {}),
-        "identity": base_manifest.get("identity", {}),
-        "defaults": base_manifest.get("defaults", {}),
-        # the mark carries: compaction mints nothing, but ids the
-        # lineage already consumed must never be reissued
-        "row_high": base_manifest.get("row_high", 0),
-        "props": base_manifest.get("props", {}),
-        "committed_at": time.time(),
-        # extra carries forward: it is the exactly-once batch-id ledger
-        # for streaming sinks (versioned_sink.py, cdc.py) and the
-        # staleness pin for materialized views — a maintenance compact
-        # wiping it would let a replayed micro-batch double-ingest
-        "extra": base_manifest.get("extra", {}),
-    }
-    if not _try_commit(table, version, manifest):
-        raise CommitConflict(
-            f"concurrent commit to {table} during compact (based on "
-            f"v{base}); re-run compaction"
-        )
-    return version
 
 
 def data_file_count(table: str, version: int | None = None) -> int:
@@ -7120,48 +6966,36 @@ def _rewrite_victims(
     base: int,
     manifest: dict,
     victims: set,
-    target_bytes: int,
+    target_bytes: "int | None" = None,
     min_files: int = 1,
 ) -> int:
-    """Shared tail of the incremental-OPTIMIZE family (bin-pack /
-    recluster): split every segment around ``victims``, read ONLY the
-    victim rows (through their deletion vectors), rewrite them as one
-    fresh segment re-clustered along the recorded layout, and commit as
-    an append-commuting ``compact``. ``min_files`` floors the output
-    count (recluster keeps the recorded layout granularity even when
-    the victim bytes would pack into fewer files — a single wide output
-    file would still be row-group-prunable, but file-level skipping is
-    the cheaper first gate)."""
+    """Shared tail of the whole OPTIMIZE family (:func:`compact`,
+    :func:`compact_small_files`, :func:`recluster`,
+    :func:`reorg_purge`): each picks its victim files, then this splits
+    every segment around ``victims``, reads ONLY the victim rows
+    (through their deletion vectors, keeping row ids and commit
+    versions), rewrites them as one fresh segment re-clustered along the
+    recorded layout, and commits as an append-commuting ``compact`` with
+    Delta's OPTIMIZE ``operationMetrics``. Output files: enough to hold
+    the victim bytes at ``target_bytes`` each (None: no byte target),
+    floored at ``min_files`` (recluster keeps the recorded layout
+    granularity even when the victim bytes would pack into fewer files —
+    a single wide output file would still be row-group-prunable, but
+    file-level skipping is the cheaper first gate). Unresolved heads
+    carry byte-for-byte: a caller leaves a segment sharded only when its
+    root-level screen proved no file inside can be a victim."""
     carried: list[dict] = []
     rewrite_segs: list[dict] = []
     for seg in _segments(manifest):
         if _is_seg_head(seg):
-            # an unresolved head carries byte-for-byte: the caller only
-            # leaves a segment sharded when its victim scan proved no
-            # file inside can be a victim (reorg_purge's carry shape)
             carried.append(seg)
             continue
-        for keep, out in (
-            ([f for f in seg["files"] if f not in victims], carried),
-            ([f for f in seg["files"] if f in victims], rewrite_segs),
-        ):
-            if not keep:
-                continue
-            sub = {
-                **seg,
-                "files": keep,
-                "stats": {
-                    p: v for p, v in seg.get("stats", {}).items() if p in keep
-                },
-            }
-            for extra in ("blooms", "dvs", "rows", "cvs"):
-                if seg.get(extra):
-                    sub[extra] = {
-                        p: v for p, v in seg[extra].items() if p in keep
-                    }
-            if seg.get("rid"):
-                sub["rid"] = [p for p in seg["rid"] if p in keep]
-            out.append(sub)
+        keep = [f for f in seg["files"] if f not in victims]
+        hit = [f for f in seg["files"] if f in victims]
+        if keep:
+            carried.append(_seg_part(seg, keep))
+        if hit:
+            rewrite_segs.append(_seg_part(seg, hit))
     tracked = all(_seg_row_tracked(s) for s in rewrite_segs)
     rows = _read_segments(
         spark,
@@ -7176,12 +7010,15 @@ def _rewrite_victims(
     victim_bytes = sum(
         os.path.getsize(os.path.join(table, f)) for f in victims
     )
-    n_out = max(1, min_files, -(-victim_bytes // target_bytes))
+    n_out = max(
+        1, min_files, -(-victim_bytes // target_bytes) if target_bytes else 1
+    )
     new_segment = _rewrite_segment(
         spark,
         table,
         manifest,
         rewrite_segs,
+        carried,
         rows,
         changed_cols=set(),  # pure layout change: rows are untouched
         target_files=n_out,
@@ -7448,94 +7285,27 @@ def reorg_purge(
     in a few segments this moves O(shadowed bytes), where a full
     :func:`compact` would rewrite the whole table to purge a few
     hundred MB. Returns the new version, or None when no file carries
-    a vector (nothing to purge)."""
+    a vector (nothing to purge). The rewrite itself is the OPTIMIZE
+    family's shared :func:`_rewrite_victims` tail."""
     base = _read_pointer(table)
     if base is None:
         raise FileNotFoundError(f"no committed version in {table}")
-    manifest = _read_manifest_root(table, base)
-    carried: list[dict] = []
-    rewrite_segs: list[dict] = []
-    for seg in _segments(manifest):
-        head = seg if _is_seg_head(seg) else None
-        if head is not None:
-            if not head.get("dv_rows", 0):
-                carried.append(head)  # unshadowed: zero detail I/O
-                continue
-            seg = _resolve_seg(table, seg)
-        dvs = {
-            k: v for k, v in _seg_dvs(seg).items() if k in set(seg["files"])
-        }
-        victims = set(dvs)
-        if not victims:
-            carried.append(head if head is not None else seg)
-            continue
-        keep = [f for f in seg["files"] if f not in victims]
-
-        def _purge_trim(members) -> dict:
-            sub = {
-                **seg,
-                "stats": {
-                    p: v
-                    for p, v in seg.get("stats", {}).items()
-                    if p in members
-                },
-            }
-            for extra in ("blooms", "rows", "cvs"):
-                if seg.get(extra):
-                    sub[extra] = {
-                        p: v for p, v in seg[extra].items() if p in members
-                    }
-            if seg.get("rid"):
-                sub["rid"] = [p for p in seg["rid"] if p in members]
-            return sub
-
-        if keep:
-            part = {**_purge_trim(set(keep)), "files": keep}
-            part.pop("dvs", None)  # kept files are unshadowed by choice
-            carried.append(part)
-        cseg = {
-            **_purge_trim(victims),
-            "files": sorted(victims),
-            "dvs": dvs,
-        }
-        rewrite_segs.append(cseg)
-    if not rewrite_segs:
+    root = _read_manifest_root(table, base)
+    segments = [
+        _resolve_seg(table, s) if _is_seg_head(s) and s.get("dv_rows") else s
+        for s in _segments(root)
+    ]
+    victims = {
+        f
+        for s in segments
+        if not _is_seg_head(s)
+        for f in _seg_dvs(s).keys() & set(s["files"])
+    }
+    if not victims:
         return None
-    # survivors only: _read_segments applies the DV anti-join; they are
-    # carries, so they keep their ids (keyed CDC cancels the purge)
-    purge_tracked = all(_seg_row_tracked(s) for s in rewrite_segs)
-    rows = _read_segments(
-        spark,
-        table,
-        {**manifest, "segments": rewrite_segs},
-        with_row_ids=purge_tracked,
-        with_commit_versions=purge_tracked,
-    )
-    victim_bytes = 0
-    for seg in rewrite_segs:
-        for f in seg["files"]:
-            try:
-                victim_bytes += os.path.getsize(os.path.join(table, f))
-            except FileNotFoundError:
-                pass
-    n_out = max(1, -(-victim_bytes // target_bytes))
-    new_segment = _rewrite_segment(
-        spark,
-        table,
-        manifest,
-        rewrite_segs,
-        rows,
-        changed_cols=set(),  # purge changes layout, never logical rows
-        target_files=n_out,
-    )
-    return _commit_rewrite(
-        table,
-        base,
-        manifest,
-        carried + [new_segment],
-        "compact",
-        # logically a no-op rewrite: any concurrent append commutes
-        rebase=lambda seg: True,
+    manifest = {**root, "segments": segments}
+    return _rewrite_victims(
+        spark, table, base, manifest, victims, target_bytes
     )
 
 
@@ -7551,7 +7321,6 @@ def maybe_compact(
     table: str,
     max_files: "int | None" = None,
     target_files: "int | None" = None,
-    stats_cols: list[str] | None = None,
     small_bytes=_UNSET,
     target_bytes: "int | None" = None,
     dv_rows_max: "int | None" = None,
@@ -7649,8 +7418,6 @@ def maybe_compact(
                 small_bytes=small_bytes,
                 target_bytes=target_bytes,
             )
-        return compact(
-            spark, table, target_files=target_files, stats_cols=stats_cols
-        )
+        return compact(spark, table, target_files=target_files)
     except CommitConflict:
         return None  # a concurrent writer moved the table; next trigger re-checks

@@ -77,7 +77,6 @@ def make_versioned_append_sink(
                 # appends breathe between compactions instead of
                 # re-triggering on the very next batch
                 target_files=max(1, compact_above // 2),
-                stats_cols=stats_cols,
                 small_bytes=compact_small_bytes,
             )
         else:
@@ -96,9 +95,7 @@ def make_versioned_append_sink(
                     if compact_small_bytes is not None
                     else {}
                 )
-                maybe_compact(
-                    batch.sparkSession, table, stats_cols=stats_cols, **kw
-                )
+                maybe_compact(batch.sparkSession, table, **kw)
 
     return sink
 
