@@ -206,3 +206,39 @@ def test_unique_gated_append_job_budget(spark, base, tmp_path):
         )
         <= 4
     )
+
+
+def test_replay_pipeline_job_budget(spark, tmp_path):
+    """One replay through the paper's pipeline, into a warehouse that
+    already holds a history replay (re-delivered in the same batch, so
+    the idempotency anti-join skips it). ``data_message`` collects its ten
+    frames on worker threads: counting at least ten jobs in the caller's
+    job group proves the threads inherit it."""
+    from wrtd_etl_spark.pipeline import ReplayWarehouse
+
+    from .test_pipeline_e2e import _doc, _page
+
+    wh = ReplayWarehouse(spark, str(tmp_path / "wh"))
+
+    def batch(*numbers):
+        return (
+            spark.createDataFrame(
+                [(n, _page(n)) for n in numbers], "replay_number long, html string"
+            ),
+            spark.createDataFrame(
+                [(n, _doc(n)) for n in numbers], "replay_number long, body string"
+            ),
+        )
+
+    wh.load_replay(*batch(1))
+    wh.data_message(1)
+    wh.drain_messages()
+    html, body = batch(2, 1)
+    load = _count_jobs(spark, lambda: wh.load_replay(html, body))
+    message = _count_jobs(spark, lambda: wh.data_message(2))
+    drain = _count_jobs(spark, lambda: wh.drain_messages())
+    # before staging the batch once, schema'd reads, shuffle-free row ids
+    # and the JVM-built outbox rows: 30, 43 and 4 jobs (perfbench trace)
+    assert load <= 12
+    assert 10 <= message <= 34
+    assert drain <= 2

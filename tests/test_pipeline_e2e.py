@@ -137,6 +137,61 @@ def test_dim_upsert_renames_across_replays(spark, warehouse):
     assert len(d) == 4  # still one row per player (upsert, not append)
 
 
+def test_dim_upsert_newest_replay_wins_within_one_batch(spark, warehouse):
+    """One batch loads replays 1 and 2, and replay 2 renames player 501:
+    the reference loads them in order, so replay 2's ``ON CONFLICT DO
+    UPDATE`` wins (functions.py:178-183)."""
+    renamed = json.loads(_doc(2))
+    renamed["players"]["501"][1] = "AlphaRenamed"
+    html = spark.createDataFrame(
+        [(1, _page(1)), (2, _page(2))], "replay_number long, html string"
+    )
+    body = spark.createDataFrame(
+        [(1, _doc(1)), (2, json.dumps(renamed))], "replay_number long, body string"
+    )
+    assert warehouse.load_replay(html, body) == 2
+
+    d = {r.id_from_json: r.nickname for r in warehouse.table("d_players").collect()}
+    assert d == {501: "AlphaRenamed", 502: "Bravo", 503: "Charlie", 504: "Delta"}
+    assert warehouse.table("players").count() == 8
+
+
+def test_drain_publish_crash_keeps_outbox(spark, warehouse, monkeypatch):
+    """A crash at the drain's publish rename must not lose the outbox: the
+    next tick recovers the pre-drain table and sends its rows again
+    (at-least-once)."""
+    import os
+
+    from wrtd_etl_spark.operators import upsert as up
+
+    html = spark.createDataFrame([(1, _page(1))], "replay_number long, html string")
+    body = spark.createDataFrame([(1, _doc(1))], "replay_number long, body string")
+    warehouse.load_replay(html, body)
+    warehouse.data_message(1)
+
+    outbox = os.path.join(warehouse.root, "messages")
+    real_rename = os.rename
+
+    def crashing_rename(src, dst):
+        if dst == outbox:  # the publish of the flipped outbox
+            raise OSError("injected crash at publish")
+        real_rename(src, dst)
+
+    monkeypatch.setattr(up.os, "rename", crashing_rename)
+    sent: list = []
+    with pytest.raises(OSError, match="injected crash"):
+        warehouse.drain_messages(send=sent.extend)
+    monkeypatch.setattr(up.os, "rename", real_rename)
+    assert len(sent) == 1
+
+    resent: list = []
+    warehouse.drain_messages(send=resent.extend)
+    assert [r["replay_number"] for r in resent] == [1]
+    assert resent[0]["text_data"] == sent[0]["text_data"]
+    got = [(r.replay_number, r.posted) for r in warehouse.table("messages").collect()]
+    assert got == [(1, True)]
+
+
 def test_cross_replay_survivor_quirk(spark, warehouse):
     """A player who survives replay 2 but died in replay 1 is NOT a
     survivor under the literal semantics (§4.3.1)."""

@@ -99,11 +99,68 @@ def test_flatten_frags_positional_mapping(parsed):
     assert f2.killer is None and f2.gun == "AKM" and f2.is_tk is True
 
 
+def test_flatten_ids_follow_numeric_key_order(spark):
+    """Ids number each section in numeric key order (frags: epoch, then
+    victim), not in the order the map keys arrive: "10" before "9", and
+    one epoch with several victims."""
+    from wrtd_etl_spark.sources.json_ingest import (
+        flatten_frags,
+        flatten_players,
+        flatten_vehicles,
+        parse_replay_json,
+    )
+
+    dead = [None, "1", None, "AKM", "5", "0"]
+    doc = {
+        "vehiclesUnits": {"10": ["car", "UAZ"], "9": ["tank", "T-72B3"], "100": ["sea", "RHIB"]},
+        "players": {"10": [1, "Ten", "MG", "A"], "2": [2, "Two", "AT", "B"], "9": [1, "Nine", "AT", "A"]},
+        "playersDead": {
+            "7200": {"9": dead},
+            "3600": {"10": dead, "2": dead, "9": dead},
+            "600": {"10": dead},
+        },
+    }
+    raw = spark.createDataFrame(
+        [(7, json.dumps(doc)), (8, json.dumps(doc))], "replay_number long, body string"
+    )
+    parsed = parse_replay_json(raw, "body", "replay_number")
+
+    def ids(df, *cols):
+        return sorted((r.replay_number, *(r[c] for c in cols), r.id) for r in df.collect())
+
+    def numbered(keys):
+        return sorted(
+            (rn, *k, rn * 1_000_000 + i)
+            for rn in (7, 8)
+            for i, k in enumerate(sorted(keys), start=1)
+        )
+
+    assert ids(flatten_vehicles(parsed), "name") == sorted(
+        (rn, name, i)
+        for rn, vid, i in numbered([(int(v),) for v in doc["vehiclesUnits"]])
+        for name in [doc["vehiclesUnits"][str(vid)][1]]
+    )
+    assert ids(flatten_players(parsed)[0], "id_from_json") == numbered(
+        [(int(p),) for p in doc["players"]]
+    )
+    assert ids(flatten_frags(parsed), "victim") == sorted(
+        (rn, v, i)
+        for rn, e, v, i in numbered(
+            [(int(e), int(v)) for e, vs in doc["playersDead"].items() for v in vs]
+        )
+    )
+
+
 def test_faction_counts(parsed):
     from wrtd_etl_spark.sources.json_ingest import faction_counts
 
-    c = {r.faction_id: r.player_count for r in faction_counts(parsed).collect()}
-    assert c == {1: 57, 2: 61, 3: 0, 4: 0}
+    c = parsed.select(*faction_counts()).collect()[0].asDict()
+    assert c == {
+        "count_players_east": 57,
+        "count_players_west": 61,
+        "count_players_guer": 0,
+        "count_players_civ": 0,
+    }
 
 
 # --- HTML extraction (S1/S3) -----------------------------------------------

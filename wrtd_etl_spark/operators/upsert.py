@@ -82,6 +82,15 @@ def _swap_in(path: str, tmp: str) -> None:
         shutil.rmtree(old)  # point of no return is already behind us
 
 
+def write_swapped(df: DataFrame, path: str) -> None:
+    """Replace the table at ``path`` with ``df``: write it next to the
+    table, then publish it with :func:`_swap_in`. ``df`` may read
+    ``path``; it is fully written before the swap."""
+    tmp = f"{path}.__tmp_{uuid.uuid4().hex}"
+    df.write.mode("overwrite").parquet(tmp)
+    _swap_in(path, tmp)
+
+
 def upsert_parquet(
     spark: SparkSession, path: str, updates: DataFrame, key: str
 ) -> None:
@@ -101,9 +110,7 @@ def upsert_parquet(
         merged = upsert_by_key(current, updates, key)
     else:
         merged = updates
-    tmp = f"{path}.__tmp_{uuid.uuid4().hex}"
-    merged.write.mode("overwrite").parquet(tmp)
-    _swap_in(path, tmp)
+    write_swapped(merged, path)
 
 
 def delete_by_key(current: DataFrame, keys: DataFrame, key: str) -> DataFrame:
@@ -124,7 +131,4 @@ def delete_parquet(
     production scale)."""
     recover_swap(path)
     current = spark.read.parquet(path)
-    remaining = delete_by_key(current, keys, key)
-    tmp = f"{path}.__tmp_{uuid.uuid4().hex}"
-    remaining.write.mode("overwrite").parquet(tmp)
-    _swap_in(path, tmp)
+    write_swapped(delete_by_key(current, keys, key), path)

@@ -7,36 +7,58 @@ The reference's flow (main.py:259-268 and the 3-DAG chain):
     compute 8 analytics queries → materialize one JSON document into the
     ``messages`` outbox → a consumer drains it and renders the message.
 
-Here that collapses into one Spark job per replay batch over a parquet
-warehouse directory. Connection-per-statement boundaries (functions.py:
-56-70) become stage boundaries; the Airflow Variable cursor becomes
-streaming.cursor; DAG branching becomes empty-DataFrame short-circuits.
+Here each step is a handful of Spark jobs over a parquet warehouse
+directory: the data is tiny, so the per-job scheduling floor, not data
+volume, sets the cost. One replay (120 players, 150 frags, 40 vehicles)
+into a warehouse with history takes 12 jobs to load, 38 to materialize
+its message and 2 to drain (``perfbench`` ``replay_etl --trace 1``; 30, 43
+and 4 before the design below). Three rules keep it there:
+
+* the fresh batch is staged once: its keys are collected once, the pages
+  joined with their parsed JSON are persisted, and every write reads the
+  staged rows instead of re-running the parse and the idempotency
+  anti-join;
+* actions that do not depend on each other run concurrently: the four
+  writes after ``replay_main``, and the ten collects of ``data_message``;
+* tables are read with their declared schema, so no read pays a footer
+  schema-inference job.
+
+Connection-per-statement boundaries (functions.py:56-70) become stage
+boundaries; the Airflow Variable cursor becomes streaming.cursor; DAG
+branching becomes empty-DataFrame short-circuits.
 
 Scale notes: facts are written partitioned by a replay-number bucket
 (sinks.append_partitioned) so the per-replay analytics prune partitions;
-the dimension upsert never shuffles the fact tables.
+the dimension upsert never shuffles the fact tables; row ids are numbered
+inside each document's row (sources.json_ingest), without an Exchange.
 """
 
 from __future__ import annotations
 
+import contextlib
+import json
 import os
+from collections.abc import Callable
+from concurrent.futures import ThreadPoolExecutor
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import sinks
-from .operators.upsert import upsert_parquet
+from .operators.upsert import recover_swap, upsert_parquet, write_swapped
 from .plans import replay_core as core
 from .schemas import D_PLAYERS, FRAGS, MESSAGES, PLAYERS, REPLAY_MAIN, VEHICLES
 from .sources.html_page import parse_replay_page
 from .sources.json_ingest import (
+    faction_counts,
     flatten_frags,
     flatten_players,
     flatten_vehicles,
     parse_replay_json,
 )
 from .streaming.cursor import dedup_against_processed
-from .streaming.outbox import drain_outbox, make_outbox
+from .streaming.outbox import drain_outbox
 
 _SCHEMAS = {
     "replay_main": REPLAY_MAIN,
@@ -47,7 +69,24 @@ _SCHEMAS = {
     "messages": MESSAGES,
 }
 
-_PARTITIONED = {"vehicles", "players", "frags"}  # facts, bucketed by replay
+
+@contextlib.contextmanager
+def _staged(df: DataFrame):
+    """``df`` persisted for the block, unpersisted when it ends."""
+    df = df.persist()
+    try:
+        yield df
+    finally:
+        df.unpersist()
+
+
+def _concurrently(spark: SparkSession, *actions) -> list:
+    """Run the zero-argument ``actions`` on one thread each; their results
+    in order. Each thread inherits the caller's job group, description and
+    tags; every action runs to its end before the first error is raised."""
+    with ThreadPoolExecutor(len(actions)) as pool:
+        futures = [pool.submit(inheritable_thread_target(spark)(a)) for a in actions]
+        return [f.result() for f in futures]
 
 
 class ReplayWarehouse:
@@ -62,12 +101,12 @@ class ReplayWarehouse:
         return os.path.join(self.root, name)
 
     def table(self, name: str) -> DataFrame:
-        path = self._path(name)
+        """The table with its declared schema (no footer-inference job);
+        the fact tables' bucket column is not part of it."""
+        path, schema = self._path(name), _SCHEMAS[name]
         if not os.path.exists(path):
-            return self.spark.createDataFrame([], _SCHEMAS[name])
-        if name in _PARTITIONED:
-            return sinks.read_partitioned(self.spark, path)
-        return self.spark.read.parquet(path)
+            return self.spark.createDataFrame([], schema)
+        return self.spark.read.schema(schema).parquet(path).select(schema.fieldNames())
 
     # --- load (K1-K3, T7) ---------------------------------------------------
 
@@ -77,109 +116,118 @@ class ReplayWarehouse:
     def load_replay(self, html_df: DataFrame, json_df: DataFrame) -> int:
         """Parse + load one batch of replays; idempotent per replay key.
 
-        Mirrors load_data_to_db's fixed order (main.py:116-173):
-        replay_main → vehicles → d_players upsert → players → frags.
         Already-loaded replays are skipped (is_exists, functions.py:79-86)
-        via an anti-join instead of the reference's full-scan Python loop.
+        via an anti-join instead of the reference's full-scan Python loop;
+        its keys are collected once. The fresh pages joined with their
+        parsed JSON are staged (persisted) once, in one partition, and
+        every write reads the staged rows; they are unpersisted before
+        returning. A batch is one poll's few replays, and one partition
+        lets the ``d_players`` aggregate (newest nickname wins) run
+        without an Exchange.
+
+        Write order: ``replay_main`` first, as the reference
+        (load_data_to_db, main.py:116-173) — it is the idempotency marker.
+        Then the ``vehicles``, ``players`` and ``frags`` appends and the
+        ``d_players`` upsert run concurrently. If one of those fails, the
+        others may have landed and ``replay_main`` already holds the
+        replay, so a re-delivery skips it: the same partial state the
+        reference's statement-per-connection load leaves.
         """
-        main_rows = parse_replay_page(html_df, "html", "replay_number")
-        main_rows = dedup_against_processed(
-            main_rows, self.existing_replays(), "replay_number"
-        )
-        fresh = main_rows.select("replay_number")
-        n_new = fresh.count()
-        if n_new == 0:
-            return 0
+        with _staged(parse_replay_page(html_df, "html", "replay_number")) as page:
+            fresh = dedup_against_processed(
+                page, self.existing_replays(), "replay_number"
+            )
+            keys = [r.replay_number for r in fresh.select("replay_number").collect()]
+            if not keys:
+                return 0
+            is_fresh = F.col("replay_number").isin(keys)
+            parsed = parse_replay_json(json_df, "body", "replay_number").filter(is_fresh)
+            fresh_batch = (
+                page.filter(is_fresh)
+                .join(F.broadcast(parsed), "replay_number", "left")
+                .coalesce(1)
+            )
+            with _staged(fresh_batch) as batch:
+                self._write_batch(batch)
+        return len(keys)
 
-        parsed = parse_replay_json(json_df, "body", "replay_number").join(
-            F.broadcast(fresh), "replay_number"
-        )
-        players, dim_updates = flatten_players(parsed)
-
+    def _write_batch(self, batch: DataFrame) -> None:
+        """Write one staged batch in :meth:`load_replay`'s order."""
         # count_players_* come from the JSON factions, active/slots from the
         # HTML — two sources that can disagree, preserved (§4.3.5)
-        from .sources.json_ingest import faction_counts
-
-        fc = (
-            faction_counts(parsed)
-            .groupBy("replay_number")
-            .pivot("faction_id", [1, 2, 3, 4])
-            .agg(F.first("player_count"))
+        main = batch.select(
+            "*",
+            *faction_counts(),
+            F.concat(
+                F.lit("https://stats.wogames.info/games/"),
+                F.col("replay_number").cast("string"),
+                F.lit("/"),
+            ).alias("replay_url"),
+        ).select(REPLAY_MAIN.fieldNames())
+        sinks.append(main, self._path("replay_main"))
+        players, dim_updates = flatten_players(batch)
+        _concurrently(
+            self.spark,
+            lambda: sinks.append_partitioned(
+                flatten_vehicles(batch), self._path("vehicles"), "replay_number"
+            ),
+            lambda: upsert_parquet(
+                self.spark, self._path("d_players"), dim_updates, "id_from_json"
+            ),
+            lambda: sinks.append_partitioned(
+                players, self._path("players"), "replay_number"
+            ),
+            lambda: sinks.append_partitioned(
+                flatten_frags(batch), self._path("frags"), "replay_number"
+            ),
         )
-        main_full = (
-            main_rows.join(fc, "replay_number", "left")
-            .withColumns(
-                {
-                    "count_players_east": F.coalesce(F.col("1"), F.lit(0)),
-                    "count_players_west": F.coalesce(F.col("2"), F.lit(0)),
-                    "count_players_guer": F.coalesce(F.col("3"), F.lit(0)),
-                    "count_players_civ": F.coalesce(F.col("4"), F.lit(0)),
-                    "replay_url": F.concat(
-                        F.lit("https://stats.wogames.info/games/"),
-                        F.col("replay_number").cast("string"),
-                        F.lit("/"),
-                    ),
-                }
-            )
-            .drop("1", "2", "3", "4")
-            .select([f.name for f in REPLAY_MAIN.fields])
-        )
-
-        sinks.append(main_full, self._path("replay_main"))
-        sinks.append_partitioned(
-            flatten_vehicles(parsed), self._path("vehicles"), "replay_number"
-        )
-        upsert_parquet(
-            self.spark, self._path("d_players"), dim_updates, "id_from_json"
-        )
-        sinks.append_partitioned(players, self._path("players"), "replay_number")
-        sinks.append_partitioned(
-            flatten_frags(parsed), self._path("frags"), "replay_number"
-        )
-        return n_new
 
     # --- analytics + outbox (the data_message step) --------------------------
 
     def analytics(self, replay_number: int) -> dict[str, DataFrame]:
         """The eight queries over the warehouse (functions.py:243-264)."""
+        return {name: build() for name, build in self._analytics(replay_number).items()}
+
+    def _analytics(self, replay_number: int) -> dict[str, Callable[[], DataFrame]]:
+        """:meth:`analytics` as builders, so that each frame can be
+        planned on the thread that collects it."""
         frags, dp = self.table("frags"), self.table("d_players")
         players, vehicles = self.table("players"), self.table("vehicles")
+        n = replay_number
         return {
-            "vehicles": core.q_vehicles(vehicles, replay_number),
-            "grouped_vehicles": core.q_vehicles_grouped(vehicles, replay_number),
-            "cutlets": core.q_cutlets(frags, dp, replay_number, is_tk=False),
-            "tks": core.q_cutlets(frags, dp, replay_number, is_tk=True),
-            "fb": core.q_frag_detail(
-                frags, dp, replay_number, [F.col("time").asc()]
+            "vehicles": lambda: core.q_vehicles(vehicles, n),
+            "grouped_vehicles": lambda: core.q_vehicles_grouped(vehicles, n),
+            "cutlets": lambda: core.q_cutlets(frags, dp, n, is_tk=False),
+            "tks": lambda: core.q_cutlets(frags, dp, n, is_tk=True),
+            "fb": lambda: core.q_frag_detail(frags, dp, n, [F.col("time").asc()]),
+            "lh": lambda: core.q_frag_detail(frags, dp, n, [F.col("time").desc()]),
+            "ls": lambda: core.q_frag_detail(
+                frags, dp, n, [F.col("distance").desc_nulls_last()]
             ),
-            "lh": core.q_frag_detail(
-                frags, dp, replay_number, [F.col("time").desc()]
-            ),
-            "ls": core.q_frag_detail(
-                frags, dp, replay_number, [F.col("distance").desc_nulls_last()]
-            ),
-            "survivors": core.q_survivors(players, dp, frags, replay_number),
-            "survivors_group": core.q_survivors_group(
-                players, dp, frags, replay_number
-            ),
+            "survivors": lambda: core.q_survivors(players, dp, frags, n),
+            "survivors_group": lambda: core.q_survivors_group(players, dp, frags, n),
         }
 
     def data_message(self, replay_number: int) -> None:
         """Materialize the analytics as one JSON outbox row (K4;
         functions.py:234-274: ROW_TO_JSON of the replay row + the eight
-        result lists, json.dumps'd into messages.text_data)."""
+        result lists, json.dumps'd into messages.text_data). The replay row
+        and the nine result frames are planned and collected concurrently."""
         main_row = self.table("replay_main").filter(
             F.col("replay_number") == replay_number
         )
-        doc = {"replay": main_row.select(F.to_json(F.struct("*"))).collect()[0][0]}
-        for name, df in self.analytics(replay_number).items():
-            doc[name] = [r.asDict(recursive=True) for r in df.collect()]
-
-        import json
-
-        outbox_row = self.spark.createDataFrame(
-            [(replay_number, None, json.dumps(doc, ensure_ascii=False), None)],
-            MESSAGES,
+        builders = {
+            "replay": lambda: main_row.select(F.to_json(F.struct("*"))),
+            **self._analytics(replay_number),
+        }
+        collects = [lambda b=b: b().collect() for b in builders.values()]
+        got = dict(zip(builders, _concurrently(self.spark, *collects)))
+        doc = {"replay": got.pop("replay")[0][0]}
+        for name, rows in got.items():
+            doc[name] = [r.asDict(recursive=True) for r in rows]
+        values = (replay_number, None, json.dumps(doc, ensure_ascii=False), None)
+        outbox_row = self.spark.range(1).select(
+            [F.lit(v).cast(f.dataType).alias(f.name) for v, f in zip(values, MESSAGES.fields)]
         )
         upsert_parquet(
             self.spark, self._path("messages"), outbox_row, "replay_number"
@@ -188,14 +236,13 @@ class ReplayWarehouse:
     # --- consumer (entry point C) --------------------------------------------
 
     def drain_messages(self, send=None) -> None:
-        """One bot tick: send unposted, flip flags (bot/botrun.py:295-309)."""
-        outbox = self.table("messages")
-        drained = drain_outbox(outbox, "replay_number", send=send)
-        drained.write.mode("overwrite").parquet(self._path("messages") + ".tmp")
-        import shutil
-
-        shutil.rmtree(self._path("messages"))
-        os.rename(self._path("messages") + ".tmp", self._path("messages"))
+        """One bot tick: send unposted, flip flags (bot/botrun.py:295-309).
+        The flipped outbox is published by a swap that a crash cannot lose
+        (:func:`~.operators.upsert.recover_swap` repairs it on entry)."""
+        path = self._path("messages")
+        recover_swap(path)
+        drained = drain_outbox(self.table("messages"), "replay_number", send=send)
+        write_swapped(drained, path)
 
 
 _SIDE_SQUARES = {
@@ -247,8 +294,6 @@ def render_embeds(doc: dict) -> list[dict]:
     ``discord.Embed``/``add_field`` (keys: title/color/fields[name, value,
     inline] or description).
     """
-    import json
-
     m = json.loads(doc["replay"]) if isinstance(doc["replay"], str) else doc["replay"]
 
     sides = []
@@ -359,8 +404,6 @@ def render_message(doc: dict) -> str:
     """Presentation layer (F14): the Discord message text from the outbox
     JSON document (bot/botrun.py:131-170). Driver-side string formatting of
     an already-collected small dict — not a query concern."""
-    import json
-
     replay = json.loads(doc["replay"]) if isinstance(doc["replay"], str) else doc["replay"]
     lines = [
         f"Реплей {replay.get('replay_number')} — {replay.get('name_mission')}",

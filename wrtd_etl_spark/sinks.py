@@ -46,11 +46,6 @@ def append_partitioned(
     ).partitionBy("__bucket").parquet(path)
 
 
-def read_partitioned(spark: SparkSession, path: str) -> DataFrame:
-    """Read back a bucket-partitioned table, hiding the layout column."""
-    return spark.read.parquet(path).drop("__bucket")
-
-
 def write_bucketed(
     df: DataFrame,
     table: str,

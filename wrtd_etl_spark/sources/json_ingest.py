@@ -10,25 +10,31 @@ functions.py:163-205 loads them with positional tuple indexing:
 * ``factions[id][2]  = player count``           (functions.py:138-141)
 
 Spark shape: ``from_json`` with the explicit nested MapType schema
-(schemas.REPLAY_JSON), then ``explode`` per section — the double Python
-loop becomes two nested explodes, and the positional mapping becomes array
-indexing. The quote-stripping the reference applies as SQL-injection
+(schemas.REPLAY_JSON), then one ``posexplode`` per section — the double
+Python loop becomes a nested ``transform`` flattened to one array, the
+positional mapping becomes array indexing, and the faction counts are
+map lookups. The quote-stripping the reference applies as SQL-injection
 armor (functions.py:166,176) is intentionally dropped: DataFrame values
 are never string-interpolated (documented divergence, SURVEY §4.2).
 
 Surrogate ``id`` columns (Postgres ``serial``) are deterministic:
-``replay_number * 1_000_000 + row_number-within-replay`` — the window is
-PARTITIONED by replay (per-replay cardinality is tiny), so id assignment
-never funnels the corpus through a single partition the way a global
-``Window.orderBy`` would at scale.
+``replay_number * 1_000_000 + position-within-replay``, numbering a
+section's entries in numeric key order (frags: ``(epoch, victim)``). The
+position is counted inside the row: the map's entries become an
+``array_sort``-ed array of structs led by the numeric key(s), and
+``posexplode`` emits each entry with its index. No window, so no
+Exchange: every replay is numbered where its document already sits.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..schemas import REPLAY_JSON
+
+#: factions key of the document → side suffix of ``count_players_<side>``
+FACTION_SIDES = {"1": "east", "2": "west", "3": "guer", "4": "civ"}
 
 
 def parse_replay_json(df: DataFrame, json_col: str, replay_col: str) -> DataFrame:
@@ -39,16 +45,30 @@ def parse_replay_json(df: DataFrame, json_col: str, replay_col: str) -> DataFram
     )
 
 
+def _keyed(section: str, key: str) -> Column:
+    """Entries of the map ``section`` as ``(key long, arr)`` structs."""
+    return F.transform(
+        F.map_entries(section),
+        lambda e: F.struct(e["key"].cast("long").alias(key), e["value"].alias("arr")),
+    )
+
+
+def _numbered(parsed: DataFrame, entries: Column) -> DataFrame:
+    """One row per struct of ``entries`` in sorted order: ``id``,
+    ``replay_number`` and the struct's fields."""
+    return parsed.select(
+        "replay_number", F.posexplode(F.array_sort(entries)).alias("pos", "e")
+    ).select(
+        (F.col("replay_number") * 1_000_000 + F.col("pos") + 1).cast("long").alias("id"),
+        "replay_number",
+        "e.*",
+    )
+
+
 def flatten_vehicles(parsed: DataFrame) -> DataFrame:
     """vehiclesUnits map → vehicles rows (functions.py:163-172)."""
-    exploded = parsed.select(
-        "replay_number", F.explode("doc.vehiclesUnits").alias("vid", "arr")
-    )
-    w = Window.partitionBy("replay_number").orderBy(F.col("vid").cast("long"))
-    return exploded.select(
-        (F.col("replay_number") * 1_000_000 + F.row_number().over(w))
-        .cast("long")
-        .alias("id"),
+    return _numbered(parsed, _keyed("doc.vehiclesUnits", "vid")).select(
+        "id",
         "replay_number",
         F.col("arr").getItem(1).alias("name"),
         F.col("arr").getItem(0).alias("type"),
@@ -60,28 +80,19 @@ def flatten_players(parsed: DataFrame) -> tuple[DataFrame, DataFrame]:
 
     Reference: functions.py:174-193 — the same section feeds the
     ``d_players`` upsert (id→nickname) and the per-replay ``players`` fact
-    (id, side, slot)."""
-    exploded = parsed.select(
-        "replay_number", F.explode("doc.players").alias("pid", "arr")
-    ).select(
-        "replay_number",
-        F.col("pid").cast("long").alias("id_from_json"),
-        F.col("arr").getItem(0).cast("long").alias("side"),
-        F.col("arr").getItem(1).alias("nickname"),
-        F.col("arr").getItem(2).alias("slot"),
-    )
-    w = Window.partitionBy("replay_number").orderBy("id_from_json")
-    players = exploded.select(
-        (F.col("replay_number") * 1_000_000 + F.row_number().over(w))
-        .cast("long")
-        .alias("id"),
+    (id, side, slot). The reference loads replays one at a time, so its
+    ``ON CONFLICT DO UPDATE`` leaves the newest replay's nickname; a batch
+    of several replays keeps that nickname with ``max_by``."""
+    rows = _numbered(parsed, _keyed("doc.players", "id_from_json"))
+    players = rows.select(
+        "id",
         "id_from_json",
         "replay_number",
-        "side",
-        "slot",
+        F.col("arr").getItem(0).cast("long").alias("side"),
+        F.col("arr").getItem(2).alias("slot"),
     )
-    dim_updates = exploded.select("id_from_json", "nickname").dropDuplicates(
-        ["id_from_json"]
+    dim_updates = rows.groupBy("id_from_json").agg(
+        F.max_by(F.col("arr").getItem(1), "replay_number").alias("nickname")
     )
     return players, dim_updates
 
@@ -89,30 +100,30 @@ def flatten_players(parsed: DataFrame) -> tuple[DataFrame, DataFrame]:
 def flatten_frags(parsed: DataFrame) -> DataFrame:
     """playersDead double map → frags rows (functions.py:196-205).
 
-    The two-level Python loop is two explodes; the epoch-seconds key
-    becomes the 'HH:mm:ss' time-of-day string exactly as the reference's
-    ``to_timestamp(...)::time`` does (F2, functions.py:203); ``is_tk`` is
-    the ``(flag = 1)`` comparison (F4)."""
-    outer = parsed.select(
-        "replay_number", F.explode("doc.playersDead").alias("epoch", "victims")
+    The two-level Python loop is a nested ``transform`` flattened to one
+    array; the epoch-seconds key becomes the 'HH:mm:ss' time-of-day string
+    exactly as the reference's ``to_timestamp(...)::time`` does (F2,
+    functions.py:203); ``is_tk`` is the ``(flag = 1)`` comparison (F4)."""
+    entries = F.flatten(
+        F.transform(
+            F.map_entries("doc.playersDead"),
+            lambda d: F.transform(
+                F.map_entries(d["value"]),
+                lambda v: F.struct(
+                    d["key"].cast("long").alias("epoch_s"),
+                    v["key"].cast("long").alias("victim"),
+                    v["value"].alias("arr"),
+                ),
+            ),
+        )
     )
-    inner = outer.select(
-        "replay_number",
-        F.col("epoch").cast("long").alias("epoch_s"),
-        F.explode("victims").alias("victim_id", "arr"),
-    )
-    w = Window.partitionBy("replay_number").orderBy(
-        "epoch_s", F.col("victim_id").cast("long")
-    )
-    return inner.select(
-        (F.col("replay_number") * 1_000_000 + F.row_number().over(w))
-        .cast("long")
-        .alias("id"),
+    return _numbered(parsed, entries).select(
+        "id",
         "replay_number",
         F.date_format(F.timestamp_seconds(F.col("epoch_s")), "HH:mm:ss").alias(
             "time"
         ),
-        F.col("victim_id").cast("long").alias("victim"),
+        "victim",
         F.col("arr").getItem(0).alias("victim_vehicle"),
         F.col("arr").getItem(1).cast("long").alias("killer"),
         F.col("arr").getItem(2).alias("killer_vehicle"),
@@ -122,15 +133,13 @@ def flatten_frags(parsed: DataFrame) -> DataFrame:
     )
 
 
-def faction_counts(parsed: DataFrame) -> DataFrame:
-    """factions map → per-side player counts (functions.py:138-141):
-    position 2 of each faction array, keyed 1..4 = EAST/WEST/GUER/CIV."""
-    return parsed.select(
-        "replay_number", F.explode("doc.factions").alias("faction_id", "arr")
-    ).select(
-        "replay_number",
-        F.col("faction_id").cast("long").alias("faction_id"),
-        F.coalesce(F.col("arr").getItem(2).cast("long"), F.lit(0)).alias(
-            "player_count"
-        ),
-    )
+def faction_counts() -> list[Column]:
+    """factions map → ``count_players_<side>`` columns over ``doc``
+    (functions.py:138-141): position 2 of each faction array, keyed 1..4 =
+    EAST/WEST/GUER/CIV, 0 when the side is absent."""
+    return [
+        F.coalesce(F.col("doc.factions")[k].getItem(2).cast("long"), F.lit(0)).alias(
+            f"count_players_{side}"
+        )
+        for k, side in FACTION_SIDES.items()
+    ]

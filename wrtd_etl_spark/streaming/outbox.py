@@ -14,8 +14,6 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..operators.upsert import upsert_by_key
-
 
 def make_outbox(per_key_payload: DataFrame, key: str) -> DataFrame:
     """Outbox rows: key, JSON document of the whole payload row, posted=NULL.
@@ -48,7 +46,8 @@ def drain_outbox(
 
     At-least-once, exactly like the reference: ``send`` runs before the
     flag flip, so a failure after send and before the returned DataFrame is
-    persisted re-sends. The idempotent flip is an upsert keyed by ``key``.
+    persisted re-sends. The idempotent flip is a projection that sets
+    ``posted`` on the sent keys.
     ``batch_size`` caps rows per tick (the reference drains 1/min)."""
     todo = unposted(outbox)
     if batch_size is not None:
@@ -56,10 +55,5 @@ def drain_outbox(
     rows = todo.collect()  # the side-effecting sink is inherently driver/worker-side
     if send is not None:
         send(rows)
-    if rows:
-        flipped = todo.sparkSession.createDataFrame(
-            [{**r.asDict(), "posted": True} for r in rows], schema=outbox.schema
-        )
-    else:
-        flipped = todo.limit(0).withColumn("posted", F.lit(True))
-    return upsert_by_key(outbox, flipped, key)
+    sent = F.col(key).isin([r[key] for r in rows])
+    return outbox.withColumn("posted", F.when(sent, True).otherwise(F.col("posted")))
