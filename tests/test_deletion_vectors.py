@@ -385,7 +385,12 @@ def test_logical_cdc_and_stream_row_accurate(spark, tmp_path):
     assert live == read_snapshot(spark, t).count()
 
 
-def test_datasource_and_sql_view_honor_vectors(spark, tmp_path):
+def test_datasource_and_sql_view_honor_vectors(spark, tmp_path, monkeypatch):
+    """Every read surface agrees on a vectored table, with the vectors as
+    plan literals (small) and as the executor-parsed anti-join (literal
+    cap 0): the DataSource, read_snapshot, SQL views (bare, WHERE-pruned,
+    VERSION AS OF) and the change feed of a commit that grew them."""
+    from wrtd_etl_spark.sources.versioned_sql import versioned_sql
     from wrtd_etl_spark.sources.versioned_table import (
         VersionedTableDataSource,
         register_versioned_view,
@@ -393,17 +398,66 @@ def test_datasource_and_sql_view_honor_vectors(spark, tmp_path):
 
     t = str(tmp_path / "tbl")
     _base(spark, t, n=300, parts=3)
-    delete_where(spark, t, F.col("k") % 3 == 0, strategy="dv")
+    delete_where(spark, t, F.col("k") % 3 == 0, strategy="dv")  # v1
+    delete_where(spark, t, F.col("k") % 5 == 0, strategy="dv")  # v2
     spark.dataSource.register(VersionedTableDataSource)
     via_fmt = (
         spark.read.format("versioned_table").option("path", t).load()
     )
-    want = sorted(i for i in range(300) if i % 3 != 0)
+    want = sorted(i for i in range(300) if i % 3 and i % 5)
+
+    def keys(sql):
+        return sorted(r.k for r in versioned_sql(spark, sql, tables={"t": t}).collect())
+
     assert sorted(r.k for r in via_fmt.collect()) == want
-    register_versioned_view(spark, "dvt", t)
-    assert sorted(
-        r.k for r in spark.sql("SELECT k FROM dvt").collect()
-    ) == want
+    for literal_cap in (V.DV_LITERAL_POSITIONS, 0):
+        monkeypatch.setattr(V, "DV_LITERAL_POSITIONS", literal_cap)
+        assert sorted(r.k for r in read_snapshot(spark, t).collect()) == want
+        view = register_versioned_view(spark, "dvt", t)
+        assert sorted(
+            r.k for r in spark.sql("SELECT k FROM dvt").collect()
+        ) == want
+        plan = view._jdf.queryExecution().executedPlan().toString()
+        assert ("Pandas" in plan) == (literal_cap == 0), plan
+        assert "Python" not in plan, plan
+        assert keys("SELECT k FROM t WHERE k BETWEEN 50 AND 99") == [
+            k for k in want if 50 <= k <= 99
+        ]
+        assert keys("SELECT k FROM t VERSION AS OF 1") == [
+            i for i in range(300) if i % 3
+        ]
+        fed = versioned_sql(
+            spark,
+            "SELECT _change_type, k FROM table_changes('t', 1, 2)",
+            tables={"t": t},
+        )
+        assert sorted(tuple(r) for r in fed.collect()) == [
+            ("delete", i) for i in range(300) if i % 5 == 0 and i % 3
+        ]
+
+
+def test_dv_literal_filter_is_flat_at_the_cap(spark, monkeypatch):
+    """At the literal cap, spread one position per file over as many
+    files as the cap allows, the literal vector is still one flat
+    expression: it plans, and drops (or takes) exactly the (file,
+    position) pairs, not a position that belongs to another file."""
+    n = V.DV_LITERAL_POSITIONS
+    monkeypatch.setattr(
+        V,
+        "_dv_literal_positions",
+        lambda table, dv_map: {f"f{i}": [i] for i in range(n)},
+    )
+    # per file f<i>: row i is vectored, row i+1 is another file's position
+    df = spark.range(n).selectExpr(
+        "concat('f', id) AS b", "explode(array(id, id + 1)) AS p"
+    )
+
+    def kept(**kw):
+        out = V._dv_filter(spark, "", df, {"x": {}}, base="b", pos="p", **kw)
+        return out.selectExpr("count(*)", "sum(p - cast(substr(b, 2) AS long))")
+
+    assert tuple(kept().first()) == (n, n)
+    assert tuple(kept(take=True).first()) == (n, 0)
 
 
 def test_vacuum_sweeps_orphan_dv_keeps_referenced(spark, tmp_path):

@@ -32,6 +32,7 @@ from wrtd_etl_spark.sources.versioned import (
     update_where,
     write_snapshot,
 )
+from wrtd_etl_spark.sources.versioned_sql import versioned_sql
 
 from .conftest import SF_CORRECT
 
@@ -141,9 +142,11 @@ def test_update_delete_job_budget(spark, base, tmp_path):
         )
         <= 1
     )
+    # the candidates carry the vector above: it filters as plan
+    # literals, so no broadcast job for the positions (was 2)
     assert (
         _count_jobs(spark, lambda: delete_where(spark, t, F.col("k") % 117 == 0))
-        <= 2
+        <= 1
     )
     assert (
         _count_jobs(
@@ -169,15 +172,27 @@ def test_update_delete_job_budget(spark, base, tmp_path):
                 base.filter(slice_).withColumn("bal", F.col("bal") * 2),
             ),
         )
-        <= 3
+        <= 2
     )
-    # maintenance on the same table: REORG PURGE of a fresh DV delete
-    # (replace_where above rewrote the vectored files), then a full
-    # OPTIMIZE, each recording Delta's OPTIMIZE operationMetrics
+    # a SQL aggregate over a vectored table: a native scan with the
+    # vector as plan literals, no Python DataSource or position job
     delete_where(spark, t, F.col("k") % 121 == 0, strategy="dv")
+    agg = "SELECT count(*) AS n, sum(bal) AS b FROM t"
+    assert (
+        _count_jobs(
+            spark, lambda: versioned_sql(spark, agg, tables={"t": t}).collect()
+        )
+        <= 2
+    )
+    # maintenance on the same table: REORG PURGE of that DV delete
+    # (replace_where above rewrote the earlier vectored files), then a
+    # full OPTIMIZE of a freshly vectored table, each recording Delta's
+    # OPTIMIZE operationMetrics (both were 2 jobs while the positions
+    # were a broadcast of executor-parsed sidecars)
     optimize_metrics = {"numRemovedFiles", "numAddedFiles"}
-    assert _count_jobs(spark, lambda: reorg_purge(spark, t)) <= 2
+    assert _count_jobs(spark, lambda: reorg_purge(spark, t)) <= 1
     assert optimize_metrics <= set(history(t)[0]["metrics"])
+    delete_where(spark, t, F.col("k") % 123 == 0, strategy="dv")
     assert _count_jobs(spark, lambda: compact(spark, t, target_files=1)) <= 1
     assert optimize_metrics <= set(history(t)[0]["metrics"])
 
@@ -238,7 +253,8 @@ def test_replay_pipeline_job_budget(spark, tmp_path):
     message = _count_jobs(spark, lambda: wh.data_message(2))
     drain = _count_jobs(spark, lambda: wh.drain_messages())
     # before staging the batch once, schema'd reads, shuffle-free row ids
-    # and the JVM-built outbox rows: 30, 43 and 4 jobs (perfbench trace)
-    assert load <= 12
-    assert 10 <= message <= 34
+    # and the JVM-built outbox rows: 30, 43 and 4 jobs (perfbench trace);
+    # 12 and 34 before the upserts read the table with the update schema
+    assert load <= 11
+    assert 10 <= message <= 33
     assert drain <= 2

@@ -236,6 +236,26 @@ def test_upsert_crash_before_old_cleanup_keeps_new_table(spark, tmp_path):
     assert not os.path.exists(f"{p}.__old")
 
 
+def test_upsert_rejects_column_mismatch(spark, tmp_path):
+    """The table is read with the updates' schema, so an update frame
+    with a column the table lacks, or lacking one it has, must raise
+    before anything is written."""
+    import pytest
+
+    from wrtd_etl_spark.operators.upsert import upsert_parquet
+
+    p = str(tmp_path / "dim")
+    base = spark.createDataFrame([(1, "a")], "id long, name string")
+    upsert_parquet(spark, p, base, "id")
+    for schema in ("id long, name string, extra long", "id long"):
+        upd = spark.createDataFrame([], schema)
+        with pytest.raises(ValueError, match="upsert columns differ"):
+            upsert_parquet(spark, p, upd, "id")
+    assert [(r.id, r.name) for r in spark.read.parquet(p).collect()] == [
+        (1, "a")
+    ]
+
+
 def test_upsert_injected_crash_never_loses_table(spark, tmp_path, monkeypatch):
     """Kill the swap at the publish rename (the exact step the old
     rmtree-then-rename protocol died on with the table already deleted):

@@ -252,6 +252,41 @@ def test_constraint_gates_rewrites_and_survives_maintenance(
     assert check_constraints(t) == {"v_pos": "v > 0"}
 
 
+def test_row_check_counts_each_written_row_once(spark, tmp_path):
+    """A clustered write whose bounds are known up front (caller-passed
+    ``layout_bounds``, or manifest stats for a rewrite) runs the plan for
+    range sampling and again for the write: the reported counts must be
+    those of the written rows, not of both passes."""
+    from pyspark.sql import functions as F
+
+    from wrtd_etl_spark.sources.versioned import (
+        QualityGateViolation,
+        add_check_constraint,
+        update_where,
+        write_snapshot,
+    )
+
+    df = spark.range(1000).select(
+        F.col("id").alias("k"),
+        F.when(F.col("id") < 142, 9).otherwise(0).alias("v"),
+    )
+    t = str(tmp_path / "tbl")
+    with pytest.raises(QualityGateViolation, match=r"in_range\(v\): 142/1000;"):
+        write_snapshot(
+            df,
+            t,
+            layout_by=["k"],
+            layout_files=4,
+            layout_bounds=[(0.0, 999.0)],
+            checks=[in_range("v", 0, 5)],
+        )
+    write_snapshot(df.withColumn("v", F.lit(0)), t, layout_by=["k"], layout_files=4)
+    add_check_constraint(spark, t, "v_ok", "v <= 5")
+    # a Column predicate derives no file prune: all 1000 rows rewrite
+    with pytest.raises(QualityGateViolation, match="v_ok: 142/1000$"):
+        update_where(spark, t, F.col("k") < 142, {"v": F.lit(9)})
+
+
 def test_drop_constraint_reopens_writes(spark, tmp_path):
     from wrtd_etl_spark.sources.versioned import (
         add_check_constraint,

@@ -2,9 +2,9 @@
 the READ half of the SQL surface. References to versioned tables —
 including Delta's `t VERSION AS OF n` / `t TIMESTAMP AS OF '...'`
 pins — rewrite to snapshot-pinned temp views (register_versioned_view,
-zero new read paths) and the statement runs through spark.sql, so the
-reference's string-SQL read surface (reference queries.py:4-74) works
-against versioned tables with time travel."""
+a native parquet scan of the pinned files) and the statement runs through
+spark.sql, so the reference's string-SQL read surface (reference
+queries.py:4-74) works against versioned tables with time travel."""
 
 from __future__ import annotations
 
@@ -38,15 +38,87 @@ def _rows(df):
     return {tuple(r) for r in df.collect()}
 
 
-def test_select_latest_equals_read_snapshot(spark, tmp_path):
+def test_select_latest_equals_read_snapshot(spark, tmp_path, monkeypatch):
+    """SQL view == read_snapshot == DataSource, also once a deletion
+    vector rides the table: as plan literals and, with the literal cap
+    at 0, as the executor-parsed anti-join."""
+    import wrtd_etl_spark.sources.versioned as V
+    from wrtd_etl_spark.sources.versioned import delete_where
+    from wrtd_etl_spark.sources.versioned_table import read_versioned
+
     t = str(tmp_path / "t")
     _seed(spark, t)
     update_where(spark, t, F.col("k") >= 5, {"v": F.lit("upd")})
-    got = versioned_sql(
-        spark, "SELECT k, v, x FROM t WHERE k > 2", tables={"t": t}
+    sql = "SELECT k, v, x FROM t WHERE k > 2"
+
+    def same():
+        got = versioned_sql(spark, sql, tables={"t": t})
+        want = read_snapshot(spark, t).filter("k > 2").select("k", "v", "x")
+        via_fmt = read_versioned(spark, t).filter("k > 2")
+        assert _rows(got) == _rows(want) == _rows(via_fmt)
+        return _rows(got)
+
+    same()
+    delete_where(spark, t, F.col("k").isin(3, 6), strategy="dv")
+    assert {r[0] for r in same()} == {4, 5, 7}
+    monkeypatch.setattr(V, "DV_LITERAL_POSITIONS", 0)
+    same()
+
+
+def test_select_where_prunes_files(spark, tmp_path):
+    """A SELECT reading one versioned table scans only the files whose
+    manifest stats admit its top-level WHERE; a WHERE over derived
+    columns (FROM subquery) prunes nothing."""
+    import os
+
+    from wrtd_etl_spark.sources.versioned import files_for_read
+
+    t = str(tmp_path / "t")
+    write_snapshot(
+        spark.range(800).select(F.col("id").alias("k")),
+        t,
+        layout_by=["k"],
+        layout_files=8,
     )
-    want = read_snapshot(spark, t).filter("k > 2").select("k", "v", "x")
-    assert _rows(got) == _rows(want)
+    kept, total = files_for_read(t, skip_filter={"k": (100, 180)})
+    assert total == 8 and 0 < len(kept) < 8
+
+    def names(df):
+        return sorted(os.path.basename(f) for f in df.inputFiles())
+
+    got = versioned_sql(
+        spark, "SELECT k FROM t WHERE k BETWEEN 100 AND 180", tables={"t": t}
+    )
+    assert names(got) == sorted(os.path.basename(f) for f in kept)
+    assert sorted(r.k for r in got.collect()) == list(range(100, 181))
+    shifted = versioned_sql(
+        spark,
+        "SELECT k FROM (SELECT k - 400 AS k FROM t) s "
+        "WHERE k BETWEEN 100 AND 180",
+        tables={"t": t},
+    )
+    assert len(names(shifted)) == 8
+    assert sorted(r.k for r in shifted.collect()) == list(range(100, 181))
+    # beside another relation the WHERE may name the other side's
+    # column: after a LEFT SEMI/ANTI join only s's k is in scope, and
+    # pruning t by it would lose j=500's match. Any join reads all of
+    # t's files (an inner join too, though its t.k bound would be sound).
+    spark.createDataFrame(
+        [(150, 500), (150, 900)], "k long, j long"
+    ).createOrReplaceTempView("src")
+    for join, col, want in (
+        ("LEFT SEMI JOIN", "k", [500]),
+        ("LEFT ANTI JOIN", "k", [900]),
+        ("JOIN", "s.k", [500]),
+    ):
+        got = versioned_sql(
+            spark,
+            f"SELECT s.j FROM src s {join} t ON s.j = t.k "
+            f"WHERE {col} BETWEEN 100 AND 180",
+            tables={"t": t},
+        )
+        assert [r.j for r in got.collect()] == want
+        assert len(names(got)) == 8
 
 
 def test_select_version_as_of_equals_pinned_snapshot(spark, tmp_path):

@@ -91,6 +91,27 @@ def write_swapped(df: DataFrame, path: str) -> None:
     _swap_in(path, tmp)
 
 
+def _check_columns(path: str, columns: list[str]) -> None:
+    """Raise ValueError unless the parquet table at ``path`` has exactly
+    ``columns`` (case-insensitive, as ``unionByName`` matches them).
+    Reads one part file's footer with pyarrow: no Spark job."""
+    import pyarrow.parquet as pq
+
+    part = next(
+        (f for f in sorted(os.listdir(path)) if f.endswith(".parquet")),
+        None,
+    )
+    if part is None:
+        return
+    have = {c.lower() for c in pq.read_schema(os.path.join(path, part)).names}
+    want = {c.lower() for c in columns}
+    if have != want:
+        raise ValueError(
+            f"upsert columns differ from the table at {path}: "
+            f"missing {sorted(have - want)}, extra {sorted(want - have)}"
+        )
+
+
 def upsert_parquet(
     spark: SparkSession, path: str, updates: DataFrame, key: str
 ) -> None:
@@ -103,10 +124,15 @@ def upsert_parquet(
     (:func:`recover_swap`, run automatically on entry). Single-writer
     only — concurrent writers need a transactional format (Delta MERGE
     INTO).
+
+    The table must carry ``updates``' columns (ValueError otherwise,
+    checked against one part file's footer on the driver); it is then
+    read with ``updates``' schema: no footer inference job per upsert.
     """
     recover_swap(path)
     if os.path.exists(path):
-        current = spark.read.parquet(path)
+        _check_columns(path, updates.columns)
+        current = spark.read.schema(updates.schema).parquet(path)
         merged = upsert_by_key(current, updates, key)
     else:
         merged = updates

@@ -2044,13 +2044,14 @@ def quality_gate_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def versioned_sql_surface(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Batch DataSource + SQL surface (sources/versioned_table.py): the
+    """SQL surface of versioned tables (sources/versioned_table.py): the
     nation dimension commits as a versioned table, a LATER commit adds
     junk rows, and the query joins the version-0 PINNED view from plain
-    ``spark.sql`` — proving spark.read.format("versioned_table") time
-    travel, the Arrow read path, and that registered views participate
-    in SQL joins (the reference's sql_to_db consumer surface,
-    functions.py:43-76, over the lake layer)."""
+    ``spark.sql`` — proving view time travel (the view is
+    ``read_snapshot``'s native parquet scan of the pinned version's
+    files, no Python DataSource in the plan) and that registered views
+    participate in SQL joins (the reference's sql_to_db consumer
+    surface, functions.py:43-76, over the lake layer)."""
     import os as _os
     import tempfile as _tf
 
@@ -2947,8 +2948,8 @@ def sql_time_travel_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     the audit query every lake user writes first. The INSERT's SELECT
     body itself reads ``VERSION AS OF 0`` (the rewriter covers DML
     bodies too). References rewrite to snapshot-pinned temp views
-    (versioned_table.register_versioned_view — zero new read paths);
-    the reference's whole read surface is SQL strings
+    (versioned_table.register_versioned_view — native parquet scans of
+    the pinned files); the reference's whole read surface is SQL strings
     (reference queries.py:4-74)."""
     import os as _os
     import tempfile as _tf

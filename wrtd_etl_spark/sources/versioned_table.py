@@ -15,7 +15,12 @@ registered data source:
 
 plus :func:`register_versioned_view`, which drops the pinned read into
 the session catalog so ``spark.sql("SELECT ... FROM dim JOIN fact")``
-joins versioned tables like any other relation.
+joins versioned tables like any other relation. A view is NOT a
+DataSource read: it is ``read_snapshot``'s native parquet scan of the
+pinned manifest's files, so SQL pays neither Python planning on the
+driver nor a Python worker per scan task; small deletion vectors ride
+that plan as literal ``row_index`` filters. The format reader below
+serves ``spark.read.format``, the streaming reader and the writers.
 
 With ``spark.sql.python.filterPushdown.enabled`` (session.py sets it),
 plain ``.filter`` predicates prune files automatically: Catalyst hands
@@ -79,6 +84,7 @@ from .versioned import (
     _read_pointer,
     _resolve_seg,
     _segments,
+    read_snapshot,
     version_as_of,
 )
 from .versioned_stream import _file_arrays, _to_arrow_schema
@@ -634,16 +640,28 @@ def register_versioned_view(
     as_of: float | None = None,
     with_row_ids: bool = False,
     with_commit_versions: bool = False,
+    skip_filter: dict[str, tuple] | None = None,
+    point_filter: dict[str, list] | None = None,
 ) -> DataFrame:
     """Pin the (latest unless ``version``/``as_of``) snapshot as a temp
     view so plain ``spark.sql`` joins versioned tables like any other
     relation. The view stays pinned to the version resolved NOW — later
     commits don't move it (re-register to advance), which is exactly the
     reader-isolation contract of the manifest design.
-    ``with_row_ids=True`` exposes the stable ``_row_id`` to SQL;
-    ``with_commit_versions=True`` exposes ``_commit_version``."""
-    df = read_versioned(
-        spark, table, version=version, as_of=as_of,
+
+    The view is :func:`~.versioned.read_snapshot`'s native parquet scan,
+    not the Python DataSource: time travel, deletion vectors, schema
+    evolution and the ``skip_filter``/``point_filter`` file pruning all
+    resolve on the driver from the manifest. ``with_row_ids=True``
+    exposes the stable ``_row_id`` to SQL; ``with_commit_versions=True``
+    exposes ``_commit_version``."""
+    df = read_snapshot(
+        spark,
+        table,
+        version=version,
+        as_of=as_of,
+        skip_filter=skip_filter,
+        point_filter=point_filter,
         with_row_ids=with_row_ids,
         with_commit_versions=with_commit_versions,
     )
