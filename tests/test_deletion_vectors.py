@@ -556,3 +556,42 @@ def test_physical_cdc_dv_accurate(spark, tmp_path):
     assert {x for x, n in pfold.items() if n < 0} == {
         x for x, n in lfold.items() if n < 0
     }
+
+
+def test_dv_commit_keeps_untouched_segments_sidecars(
+    spark, tmp_path, monkeypatch
+):
+    """A merge-on-read delete re-shards only the segment whose files
+    gained positions: the other candidates carry as their parent heads,
+    so the commit shares their sidecar refs with its parent and the
+    change feed over it opens one sidecar per side, not the table."""
+    from wrtd_etl_spark.sources.versioned import table_changes_physical
+
+    t = str(tmp_path / "tbl")
+    for i in range(20):
+        write_snapshot(
+            spark.range(i * 10, i * 10 + 10, 1, 1).withColumnRenamed(
+                "id", "k"
+            ),
+            t,
+            mode="overwrite" if i == 0 else "append",
+        )
+    v = delete_where(spark, t, F.col("k") == 42, strategy="dv")
+
+    def refs(version):
+        root = V._read_manifest_root(t, version)
+        return {s["ref"] for s in V._segments(root)}
+
+    assert len(refs(v)) == 20 and len(refs(v) & refs(v - 1)) == 19
+    real = V._resolve_seg
+    opened = []
+
+    def counting(table, seg):
+        if V._is_seg_head(seg):
+            opened.append(seg["ref"])
+        return real(table, seg)
+
+    monkeypatch.setattr(V, "_resolve_seg", counting)
+    got = table_changes_physical(spark, t, v - 1, v).collect()
+    assert len(opened) <= 2
+    assert [(r.k, r._change_type) for r in got] == [(42, "delete")]

@@ -178,21 +178,23 @@ def test_100k_file_plan_opens_one_sidecar(spark, tmp_path, monkeypatch):
 def test_100k_file_datasource_plan_opens_one_sidecar(
     spark, tmp_path, monkeypatch
 ):
-    """The versioned_table DataSource reader plans the same way: root
-    summary prunes segments, detail resolves only for survivors, one
-    InputPartition per surviving file."""
+    """The versioned_table DataSource reader plans the same way (it
+    reads ``versioned._plan_snapshot``): root summary prunes segments,
+    detail resolves only for survivors, one InputPartition per
+    surviving file."""
+    import wrtd_etl_spark.sources.versioned as V
     import wrtd_etl_spark.sources.versioned_table as VT
 
     t = str(tmp_path / "big")
     _synthetic_table(spark, t)
     resolves = []
-    real = VT._resolve_seg
+    real = V._resolve_seg
 
     def counting(table, seg):
         resolves.append(seg.get("ref"))
         return real(table, seg)
 
-    monkeypatch.setattr(VT, "_resolve_seg", counting)
+    monkeypatch.setattr(V, "_resolve_seg", counting)
     rdr = VT.VersionedTableReader(
         {"path": t, "skip_filter": json.dumps({"k": [150, 250]})}
     )

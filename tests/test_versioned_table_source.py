@@ -144,6 +144,36 @@ def test_registered_view_joins_in_plain_sql(spark, tmp_path):
     assert spark.sql("SELECT COUNT(*) n FROM dim_v").collect()[0].n == 3
 
 
+def test_arrow_unsupported_type_fails_before_any_job(spark, tmp_path):
+    """The format reader hands Spark Arrow batches and nothing else, so
+    a column type Arrow cannot carry (a year-month interval: parquet
+    stores it) fails when the reader is built on the driver — the same
+    error class the executors would hit, but before any job starts.
+    The native parquet read of ``read_snapshot`` is unaffected."""
+    import uuid
+
+    t = str(tmp_path / "tbl")
+    write_snapshot(
+        spark.sql(
+            "SELECT id AS k, make_ym_interval(1, CAST(id AS INT)) AS ym "
+            "FROM range(4)"
+        ),
+        t,
+    )
+    assert read_snapshot(spark, t).count() == 4
+    sc = spark.sparkContext
+    gid = f"arrow_{uuid.uuid4().hex[:8]}"
+    sc.setJobGroup(gid, "arrow-unsupported read")
+    try:
+        with pytest.raises(
+            Exception, match="UNSUPPORTED_DATA_TYPE_FOR_ARROW_CONVERSION"
+        ):
+            read_versioned(spark, t).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup(gid) == []
+
+
 def test_format_option_validation(spark, tmp_path):
     t = str(tmp_path / "tbl")
     write_snapshot(spark.range(3).withColumnRenamed("id", "v"), t)

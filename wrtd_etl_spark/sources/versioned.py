@@ -2566,10 +2566,15 @@ def _read_segments(
     with_row_ids: bool = False,
     with_commit_versions: bool = False,
     cv_after: "int | None" = None,
+    with_positions: bool = False,
 ) -> DataFrame:
     """Evolved-table read: per segment rename (alias map) → lossless cast
     to the table schema → unionByName with NULL fill for absent columns.
     Column order pinned to the manifest schema.
+
+    ``with_positions=True`` attaches ``__dvb``/``__dvp`` (file basename,
+    row index), captured from the raw scan like the row ids' — the
+    position source of merge-on-read DML (:func:`_dv_candidate_scan`).
 
     ``with_row_ids=True`` attaches the stable row id as ``__row_id``
     (ROW_ID_COL): files that materialized the column (rewrites) read it
@@ -2662,7 +2667,7 @@ def _read_segments(
                 F.col(ROW_CV_COL).isNull()
                 | (F.col(ROW_CV_COL) > F.lit(cv_after))
             )
-        need_base = with_row_ids or (
+        need_base = with_row_ids or with_positions or (
             with_commit_versions
             and len({v for v in g["cvs"].values()}) > 1
         )
@@ -2675,7 +2680,7 @@ def _read_segments(
                     F.split(F.col("_metadata.file_path"), "/"), -1
                 ),
             )
-        if with_row_ids:
+        if with_row_ids or with_positions:
             part = part.withColumn("__rt_ix", F.col("_metadata.row_index"))
         if with_commit_versions:
             # per-segment head cv: NULL (fresh/modified row) coalesces
@@ -2737,12 +2742,16 @@ def _read_segments(
         out = part if out is None else out.unionByName(
             part, allowMissingColumns=True
         )
+    extras = ([ROW_ID_COL] if with_row_ids else []) + (
+        [ROW_CV_COL] if with_commit_versions else []
+    )
     if out is None:
         out = spark.createDataFrame([], target)
-        if with_row_ids:
-            out = out.withColumn(ROW_ID_COL, F.lit(None).cast("long"))
-        if with_commit_versions:
-            out = out.withColumn(ROW_CV_COL, F.lit(None).cast("long"))
+        for c in extras:
+            out = out.withColumn(c, F.lit(None).cast("long"))
+        if with_positions:
+            out = out.withColumn("__dvb", F.lit(None).cast("string"))
+            out = out.withColumn("__dvp", F.lit(None).cast("long"))
         return out
     for f in target.fields:
         # a column added by alter_add_column exists in the table schema
@@ -2781,9 +2790,11 @@ def _read_segments(
             ROW_ID_COL,
             F.coalesce(F.col(ROW_ID_COL), base_expr + F.col("__rt_ix")),
         )
-    extras = ([ROW_ID_COL] if with_row_ids else []) + (
-        [ROW_CV_COL] if with_commit_versions else []
-    )
+    if with_positions:
+        extras += [
+            F.col("__rt_f").alias("__dvb"),
+            F.col("__rt_ix").alias("__dvp"),
+        ]
     return out.select(*[f.name for f in target.fields], *extras)
 
 
@@ -2942,30 +2953,73 @@ def files_for_read(
         if version is None:
             raise FileNotFoundError(f"no committed version in {table}")
     manifest = _read_manifest_root(table, version)
-    segs = _segments(manifest)
     total = sum(
-        s["n_files"] if _is_seg_head(s) else len(s["files"]) for s in segs
+        s["n_files"] if _is_seg_head(s) else len(s["files"])
+        for s in _segments(manifest)
     )
-    aliases = manifest.get("aliases", {})
-    kept: list[str] = []
-    for seg in segs:
+    kept = [
+        f
+        for s in _plan_snapshot(table, manifest, skip_filter, point_filter)
+        for f in s["files"]
+    ]
+    return kept, total
+
+
+def _plan_snapshot(
+    table: str,
+    root: dict,
+    skip_filter: "dict[str, tuple] | None" = None,
+    point_filter: "dict[str, list] | None" = None,
+    cv_after: "int | None" = None,
+) -> list[dict]:
+    """The segments a read of ``root`` sees, RESOLVED and cut to the
+    files it must open — the one driver-side snapshot plan behind
+    :func:`read_snapshot`, :func:`changed_rows_since`,
+    :func:`files_for_read` and the ``versioned_table`` reader. Pruning,
+    cheapest first, never semantic:
+
+    * ``cv_after``: a segment whose head ``cv`` is at or below the bound
+      holds no row set after it (carried rows materialize older
+      versions; fresh rows coalesce to the head cv) and is dropped at
+      the root.
+    * ``skip_filter``/``point_filter``: the root head's coarse summary
+      drops whole segments, so their detail sidecars never open; the
+      survivors' per-file stats and blooms drop files.
+    * ``cv_after`` inside a REWRITTEN segment (head cv = the rewrite's
+      version even when most rows are old): a file is skipped when its
+      recorded carried-cv range (``cvs``) predates the bound and it holds
+      no NULL-cv row (those coalesce to the surviving head cv). The
+      all-unknown file (hi = the -1 sentinel) is skippable too: unknown
+      rows never pass ``> cv_after``."""
+    aliases = root.get("aliases", {})
+    filtered = bool(skip_filter or point_filter)
+
+    def admits(st: "dict | None") -> bool:
+        if st is None or st["nulls"]:
+            return True  # no proof, or NULL-cv rows: stay in scope
+        return st["hi"] is not None and st["hi"] > cv_after
+
+    out = []
+    for seg in _segments(root):
+        cv = seg.get("cv")
+        if cv_after is not None and cv is not None and cv <= cv_after:
+            continue
         if _is_seg_head(seg):
-            # two-tier plan: the root's coarse summary prunes whole
-            # segments; only survivors open their detail sidecar
-            if (skip_filter or point_filter) and not _head_may_match(
+            if filtered and not _head_may_match(
                 seg, aliases, skip_filter, point_filter
             ):
                 continue
             seg = _resolve_seg(table, seg)
-        if not skip_filter and not point_filter:
-            kept.extend(seg["files"])
-        else:
-            kept.extend(
-                _prune_segment_files(
-                    seg, aliases, skip_filter, point_filter
-                )
+        files = seg["files"]
+        if filtered:
+            files = _prune_segment_files(
+                seg, aliases, skip_filter, point_filter
             )
-    return kept, total
+        cvs = seg.get("cvs")
+        if cv_after is not None and cvs:
+            files = [f for f in files if admits(cvs.get(f))]
+        out.append(seg if files is seg["files"] else {**seg, "files": files})
+    return out
 
 
 def version_as_of(table: str, ts: float) -> int:
@@ -3030,23 +3084,7 @@ def read_snapshot(
         if version is None:
             raise FileNotFoundError(f"no committed version in {table}")
     manifest = _read_manifest_root(table, version)
-    aliases = manifest.get("aliases", {})
-    segs = []
-    for seg in _segments(manifest):
-        if _is_seg_head(seg):
-            if (skip_filter or point_filter) and not _head_may_match(
-                seg, aliases, skip_filter, point_filter
-            ):
-                continue
-            seg = _resolve_seg(table, seg)
-        if skip_filter or point_filter:
-            seg = {
-                **seg,
-                "files": _prune_segment_files(
-                    seg, aliases, skip_filter, point_filter
-                ),
-            }
-        segs.append(seg)
+    segs = _plan_snapshot(table, manifest, skip_filter, point_filter)
     if with_row_ids or with_commit_versions:
         out = _read_segments(
             spark,
@@ -3236,55 +3274,18 @@ def _dv_candidate_scan(
     manifest: dict,
     rewrite_segs: list[dict],
 ) -> DataFrame:
-    """The candidate files normalized to CURRENT names/types (alias map
-    + casts + NULL fill, the same shape a read presents) PLUS
-    ``__dvb``/``__dvp`` (file basename, row_index) — the position
-    source for merge-on-read deletes/updates. Rows an EXISTING deletion
-    vector already removed are excluded, so a MoR update can never
-    resurrect them and a repeat delete never re-collects them."""
-    from pyspark.sql.types import StructType
-
-    target = StructType.fromJson(manifest["schema"])
-    aliases = manifest.get("aliases", {})
-    out = None
-    for seg in rewrite_segs:
-        part = spark.read.schema(
-            StructType.fromJson(seg["schema"])
-        ).parquet(*[os.path.join(table, f) for f in seg["files"]])
-        cols = [
-            F.element_at(
-                F.split(F.col("_metadata.file_path"), "/"), -1
-            ).alias("__dvb"),
-            F.col("_metadata.row_index").alias("__dvp"),
-        ]
-        for c in part.columns:
-            cur = aliases.get(c, c)
-            tf = next(
-                (f for f in target.fields if f.name == cur), None
-            )
-            cols.append(
-                F.col(c).cast(tf.dataType).alias(cur)
-                if tf is not None
-                else F.col(c).alias(cur)
-            )
-        p = part.select(*cols)
-        dvs = {
-            rel: v
-            for rel, v in _seg_dvs(seg).items()
-            if rel in set(seg["files"])
-        }
-        p = _dv_filter(spark, table, p, dvs, base="__dvb", pos="__dvp")
-        _dflt = manifest.get("defaults", {})
-        for f in target.fields:
-            if f.name not in p.columns:
-                # per-SEGMENT fill, like _read_segments: a segment
-                # written before a defaulted ALTER reads the declared
-                # constant, so MoR matched images carry it forward
-                p = p.withColumn(
-                    f.name, F.lit(_dflt.get(f.name)).cast(f.dataType)
-                )
-        out = p if out is None else out.unionByName(p)
-    return out
+    """The candidate files as a read presents them (:func:`_read_segments`:
+    alias map, casts, default and NULL fill) PLUS ``__dvb``/``__dvp``
+    (file basename, row_index) — the position source for merge-on-read
+    deletes/updates. Rows an EXISTING deletion vector already removed
+    are excluded, so a MoR update can never resurrect them and a repeat
+    delete never re-collects them."""
+    return _read_segments(
+        spark,
+        table,
+        {**manifest, "segments": rewrite_segs},
+        with_positions=True,
+    )
 
 
 @dataclass
@@ -3377,7 +3378,7 @@ def _run_dml(
        commits, restaging minted identity ids on a race."""
     from pyspark.sql.types import StructType
 
-    carried, rewrite_segs = _split_for_rewrite(
+    carried, rewrite_segs, origins = _split_for_rewrite(
         manifest, manifest.get("aliases", {}), spec.prune, spec.point,
         table=table,
     )
@@ -3471,8 +3472,10 @@ def _run_dml(
     parts: list[DataFrame] = []  # the fresh segment's rows, in order
     if dv:
         tracked = False
-        segments = carried + (
-            _dv_mark_deleted(table, rewrite_segs, pdf) if rewrite_segs else []
+        segments = (
+            _dv_mark_deleted(table, carried, rewrite_segs, origins, pdf)
+            if rewrite_segs
+            else list(carried)
         )
         if spec.sets is not None and n_matched - n_del > 0:
             parts.append(
@@ -3690,15 +3693,23 @@ def _dv_positions_pdf(hits: DataFrame):
 
 
 def _dv_mark_deleted(
-    table: str, rewrite_segs: list[dict], pdf
+    table: str,
+    carried: list[dict],
+    rewrite_segs: list[dict],
+    origins: list[tuple],
+    pdf,
 ) -> list[dict]:
     """Union the collected (__dvb, __dvp) hit positions (a pandas frame
     — Arrow transfer, not Row collect: at DV_MAX_POSITIONS (5M) the
     Row-object form is GBs of driver heap; the pandas frame is two flat
     columns, ~80 MB) into each file's cumulative vector, persist ONE new
-    sidecar, and return the candidate segments with updated ``dvs``
-    entries — same files, new metadata. The vector stage of every
-    merge-on-read DELETE, UPDATE and MERGE (:func:`_run_dml`)."""
+    sidecar, and return the new version's segments: ``carried`` plus the
+    candidates with updated ``dvs`` entries — same files, new metadata.
+    A candidate whose files gained no position carries as the parent
+    segment it was cut from (``origins``, see :func:`_split_for_rewrite`),
+    so its head and sidecar stay shared with the parent version. The
+    vector stage of every merge-on-read DELETE, UPDATE and MERGE
+    (:func:`_run_dml`)."""
     base_to_rel = {
         os.path.basename(f): f
         for seg in rewrite_segs
@@ -3719,16 +3730,18 @@ def _dv_mark_deleted(
                 new_pos[rel].extend(_dv_unpack(old["pos"]).tolist())
     for rel, pos in new_pos.items():
         merged[rel] = sorted(set(pos))
-    if not merged:
-        return list(rewrite_segs)  # no matches: carry unchanged
-    ref = _write_dv_sidecar(table, merged)
-    out = []
-    for seg in rewrite_segs:
+    ref = _write_dv_sidecar(table, merged) if merged else None
+    out = list(carried)
+    for seg, (parent, kept) in zip(rewrite_segs, origins):
+        if not any(rel in merged for rel in seg["files"]):
+            out = [s for s in out if s is not kept]
+            out.append(parent)
+            continue
         dvs = dict(_seg_dvs(seg))
         for rel in seg["files"]:
             if rel in merged:
                 dvs[rel] = {"ref": ref, "n": len(merged[rel])}
-        out.append({**seg, **({"dvs": dvs} if dvs else {})})
+        out.append({**seg, "dvs": dvs})
     return out
 
 
@@ -3804,7 +3817,7 @@ def _split_for_rewrite(
     prune: dict[str, tuple] | None,
     point: dict[str, list] | None = None,
     table: str | None = None,
-) -> tuple[list[dict], list[dict]]:
+) -> tuple[list[dict], list[dict], list[tuple]]:
     """Partition the version's segments into (carried, rewrite): files
     whose stats CANNOT intersect ``prune`` (range) / ``point`` (value
     membership vs stats + blooms) carry forward untouched (by reference
@@ -3817,9 +3830,14 @@ def _split_for_rewrite(
     excludes the predicate — or that survives per-file pruning fully
     intact — carries as the HEAD, so the rewritten commit reuses its
     detail sidecar byte-for-byte; only partially-kept segments restage
-    detail."""
+    detail.
+
+    Returns ``(carried, rewrite, origins)``: ``origins[i]`` is the
+    parent segment ``rewrite[i]`` was cut from and that segment's part
+    in ``carried`` (None when every file is a candidate)."""
     carried: list[dict] = []
     rewrite_segs: list[dict] = []
+    origins: list[tuple] = []
     for seg in _segments(manifest):
         head = seg if _is_seg_head(seg) else None
         if head is not None:
@@ -3838,17 +3856,20 @@ def _split_for_rewrite(
             carried.append(head)
             continue
         keep = [f for f in seg["files"] if f not in cand]
+        kept = None
         if keep:
             # kept files keep their deletion vectors; replaced files'
             # vectors die with the files
-            carried.append(_seg_part(seg, keep))
+            kept = _seg_part(seg, keep)
+            carried.append(kept)
         if cand:
             # The candidate segment must carry ONLY cand-file sidecar
             # state: a stale dv/stat/bloom entry for a file kept by the
             # carried part would be re-persisted by _dv_mark_deleted and
             # could later shadow the owning segment's newer ref.
             rewrite_segs.append(_seg_part(seg, sorted(cand)))
-    return carried, rewrite_segs
+            origins.append((head or seg, kept))
+    return carried, rewrite_segs, origins
 
 
 def _seg_part(seg: dict, files: list[str]) -> dict:
@@ -3928,7 +3949,6 @@ def _rewrite_segment(
     }
     if uniq:
         rewritten = {f for s in rewrite_segs for f in s["files"]}
-        aliases_u = manifest.get("aliases", {})
         for name, cols in sorted(uniq.items()):
             keys = rows.select(*cols).na.drop("any")
             # fused probe (r13: one grouped agg answered the dup check
@@ -3967,34 +3987,12 @@ def _rewrite_segment(
                 )
             if nk == 0:
                 continue  # no non-NULL replacement keys: nothing to hit
-            carried_segs = []
-            for seg in _segments(manifest):
-                if _is_seg_head(seg):
-                    # summary pre-prune: a segment whose coarse bounds
-                    # exclude every replacement key never opens detail
-                    if pf is not None and not _head_may_match(
-                        seg, aliases_u, None, pf
-                    ):
-                        continue
-                    seg = _resolve_seg(table, seg)
-                carried_segs.append(
-                    {
-                        **seg,
-                        "files": _prune_segment_files(
-                            {
-                                **seg,
-                                "files": [
-                                    f
-                                    for f in seg["files"]
-                                    if f not in rewritten
-                                ],
-                            },
-                            aliases_u,
-                            None,
-                            pf,
-                        ),
-                    }
-                )
+            # the carried files that may hold a replacement key: a
+            # segment whose coarse bounds exclude them never opens detail
+            carried_segs = [
+                {**s, "files": [f for f in s["files"] if f not in rewritten]}
+                for s in _plan_snapshot(table, manifest, None, pf)
+            ]
             if any(s["files"] for s in carried_segs):
                 old = _read_segments(
                     spark, table, {**manifest, "segments": carried_segs}
@@ -4766,6 +4764,125 @@ def _map_uncanon(col, dtype):
     return col
 
 
+def _harmonize(
+    new: DataFrame, old: DataFrame, defaults: dict, hidden: tuple = ()
+) -> "tuple[DataFrame, DataFrame]":
+    """The two sides of a diff on one column set: old's columns cast to
+    new's types, a column only new has padded on the old side with its
+    declared DEFAULT (NULL when none), and a column only old has
+    surfaced on the new side as NULL. ``hidden`` columns are left alone.
+    The default pad matters: the new side's carried rows read a column
+    ALTERed in with a default as that default, so a NULL pad would turn
+    every carried row into an insert+delete pair — with it they cancel.
+    Shared by the keyed and exceptAll branches of :func:`table_changes`
+    and :func:`sync_changes`' full diff."""
+    new_types = {c: t for c, t in new.dtypes if c not in hidden}
+    old_types = {c: t for c, t in old.dtypes if c not in hidden}
+    for c, t in new_types.items():
+        if c not in old_types:
+            old = old.withColumn(c, F.lit(defaults.get(c)).cast(t))
+        elif old_types[c] != t:
+            old = old.withColumn(c, F.col(c).cast(t))
+    for c in [c for c in old_types if c not in new_types]:
+        new = new.withColumn(c, F.lit(None).cast(old_types[c]))
+    return new, old
+
+
+def _changed_segments(
+    table: str, root: dict, prev_root: "dict | None"
+) -> "tuple[list[dict], list[dict]]":
+    """(cur, prev) segments of two roots RESOLVED, with every segment
+    whose sidecar ref appears in BOTH dropped from both sides: a shared
+    ref is identical detail (files, vectors, lineage) and contributes
+    nothing to a diff, so the shared bulk of an 800k-file table is never
+    opened. ``prev_root=None`` (version 0, or an expired parent) makes
+    every segment of ``root`` changed."""
+    cur = _segments(root)
+    prev = _segments(prev_root) if prev_root is not None else []
+    shared = {s["ref"] for s in cur if _is_seg_head(s)} & {
+        s["ref"] for s in prev if _is_seg_head(s)
+    }
+
+    def changed(segs: list[dict]) -> list[dict]:
+        return [
+            _resolve_seg(table, s)
+            for s in segs
+            if not (_is_seg_head(s) and s["ref"] in shared)
+        ]
+
+    return changed(cur), changed(prev)
+
+
+def _plan_commit_changes(
+    table: str,
+    root: dict,
+    prev_root: "dict | None",
+    aliases: dict,
+    skip_filter: "dict[str, tuple] | None" = None,
+) -> "list[tuple[str, dict, str, object]]":
+    """One commit's file diff against its parent root, in emission order
+    — the one change plan behind :func:`table_changes_physical` and the
+    streaming change feed. Each entry is ``(kind, segment schema, file,
+    vector)``:
+
+    * ``"insert"`` — a file the parent lacks; ``vector`` is its current
+      deletion-vector entry or None (a file can arrive already vectored:
+      rollback to / clone of a DV'd version — its deleted rows never
+      insert).
+    * ``"grown"`` — a file in both whose vector changed (a merge-on-read
+      DML moved no file); ``vector`` is ``(current entry, parent entry
+      or None)``, and only the positions the current one adds are
+      deleted rows.
+    * ``"delete"`` — a parent file the commit removed; ``vector`` is its
+      parent entry or None (rows the vector already deleted were
+      emitted when it landed and must not delete twice).
+
+    Only segments whose sidecar ref changed are opened
+    (:func:`_changed_segments`); membership is decided over their
+    UNPRUNED files, so a file moved between segments never reads as
+    removed + inserted. ``skip_filter`` then drops files whose recorded
+    stats (the current side's, the parent's for removals) cannot
+    intersect it — a subscriber's over-approximation, emitting nothing
+    on either side for such files. ``prev_root=None`` (version 0, or an
+    expired parent) delivers the whole root as inserts."""
+    cur_segs, prev_segs = _changed_segments(table, root, prev_root)
+
+    def side(segs: list[dict]):
+        files: set[str] = set()
+        dvs: dict[str, dict] = {}
+        allow: "set[str] | None" = set() if skip_filter else None
+        for s in segs:
+            mem = set(s["files"])
+            files |= mem
+            # filter to the segment's own files: an entry for a file the
+            # segment no longer owns must not shadow the owner's
+            dvs.update({k: e for k, e in _seg_dvs(s).items() if k in mem})
+            if allow is not None:
+                allow.update(_prune_segment_files(s, aliases, skip_filter))
+        return files, dvs, allow
+
+    cur_files, cur_dvs, cur_allow = side(cur_segs)
+    prev_files, prev_dvs, prev_allow = side(prev_segs)
+    out: list[tuple] = []
+    for s in cur_segs:
+        for f in s["files"]:
+            if cur_allow is not None and f not in cur_allow:
+                continue
+            if f not in prev_files:
+                out.append(("insert", s["schema"], f, cur_dvs.get(f)))
+            elif f in cur_dvs and cur_dvs[f] != prev_dvs.get(f):
+                out.append(
+                    ("grown", s["schema"], f, (cur_dvs[f], prev_dvs.get(f)))
+                )
+    for s in prev_segs:
+        for f in s["files"]:
+            if prev_allow is not None and f not in prev_allow:
+                continue
+            if f not in cur_files:
+                out.append(("delete", s["schema"], f, prev_dvs.get(f)))
+    return out
+
+
 def _table_changes_keyed(
     spark: SparkSession, table: str, from_version: int, to_version: int
 ) -> "DataFrame | None":
@@ -4804,18 +4921,7 @@ def _table_changes_keyed(
         from_root = _read_manifest_root(table, from_version)
     except FileNotFoundError:
         return None
-    shared = {
-        s["ref"] for s in _segments(to_root) if _is_seg_head(s)
-    } & {s["ref"] for s in _segments(from_root) if _is_seg_head(s)}
-
-    def _changed(root: dict) -> list[dict]:
-        return [
-            _resolve_seg(table, s)
-            for s in _segments(root)
-            if not (_is_seg_head(s) and s["ref"] in shared)
-        ]
-
-    cur_segs, prev_segs = _changed(to_root), _changed(from_root)
+    cur_segs, prev_segs = _changed_segments(table, to_root, from_root)
     if not all(_seg_row_tracked(s) for s in cur_segs + prev_segs):
         return None  # pre-tracking files in the diff scope: honest diff
     new = _read_segments(
@@ -4827,27 +4933,9 @@ def _table_changes_keyed(
         {**from_root, "segments": prev_segs},
         with_row_ids=True,
     ).withColumnRenamed(ROW_ID_COL, "__o_rid")
-    # schema harmonization, exactly the exceptAll branch's rules: pad
-    # old to new's types, surface old-only columns on the new side.
-    # A column ADDED in the range pads the old side with its declared
-    # DEFAULT (r10): the new side's carried rows read that default, so
-    # a NULL pad would flip every carried row into an insert+delete
-    # pair the moment someone ALTERs with a default (the r9 sharp
-    # edge, now real) — with the default pad they cancel.
-    to_defaults = to_root.get("defaults") or {}
-    new_types = dict(
-        (c, t) for c, t in new.dtypes if c != "__n_rid"
+    new, old = _harmonize(
+        new, old, to_root.get("defaults") or {}, ("__n_rid", "__o_rid")
     )
-    old_types = dict(
-        (c, t) for c, t in old.dtypes if c != "__o_rid"
-    )
-    for c, t in new_types.items():
-        if c not in old_types:
-            old = old.withColumn(c, F.lit(to_defaults.get(c)).cast(t))
-        elif old_types[c] != t:
-            old = old.withColumn(c, F.col(c).cast(t))
-    for c in [c for c in old_types if c not in new_types]:
-        new = new.withColumn(c, F.lit(None).cast(old_types[c]))
     data_cols = [c for c in new.columns if c != "__n_rid"]
     n2 = new.select(
         *[F.col(c).alias(f"__n_{c}") for c in data_cols], "__n_rid"
@@ -4917,36 +5005,13 @@ def changed_rows_since(
         if version is None:
             raise FileNotFoundError(f"no committed version in {table}")
     root = _read_manifest_root(table, version)
-    segs = []
-    for seg in _segments(root):
-        cv = seg.get("cv")
-        if cv is not None and cv <= since_version:
-            continue  # every row inside was set at or before the bound
-        seg = _resolve_seg(table, seg) if _is_seg_head(seg) else seg
-        cvs = seg.get("cvs")
-        if cvs:
-            # sub-segment prune (r9 VERDICT ask #3): a REWRITTEN
-            # segment carries head cv = the rewrite's version, but each
-            # file's materialized __row_cv range bounds what the sync
-            # can find inside. A file is skippable iff its max carried
-            # cv <= the bound AND it holds no NULL-cv rows (those
-            # coalesce to the head cv, which survived the root prune).
-            # The all-unknown file (hi == sentinel -1) is skippable
-            # too: unknown rows never satisfy `> since_version`.
-            def _admits(f: str) -> bool:
-                st = cvs.get(f)
-                if st is None:
-                    return True  # no proof: stay in scope
-                if st["nulls"]:
-                    return True
-                hi = st["hi"]
-                return hi is not None and hi > since_version
-            seg = {**seg, "files": [f for f in seg["files"] if _admits(f)]}
-        segs.append(seg)
     out = _read_segments(
         spark,
         table,
-        {**root, "segments": segs},
+        {
+            **root,
+            "segments": _plan_snapshot(table, root, cv_after=since_version),
+        },
         with_commit_versions=True,
         cv_after=since_version,
     )
@@ -5065,19 +5130,13 @@ def sync_changes(
         new = read_snapshot(
             spark, table, version=to_version, with_commit_versions=True
         )
-        to_defaults = (
-            _read_manifest_root(table, to_version).get("defaults") or {}
-        )
         data_cols = [c for c in new.columns if c != ROW_CV_OUT]
-        new_types = dict(new.dtypes)
-        old_types = dict(old.dtypes)
-        for c in data_cols:
-            if c not in old_types:
-                old = old.withColumn(
-                    c, F.lit(to_defaults.get(c)).cast(new_types[c])
-                )
-            elif old_types[c] != new_types[c]:
-                old = old.withColumn(c, F.col(c).cast(new_types[c]))
+        _, old = _harmonize(
+            new,
+            old,
+            _read_manifest_root(table, to_version).get("defaults") or {},
+            (ROW_CV_OUT,),
+        )
         old = old.select(*data_cols)  # old-only (dropped) columns gone
         types = {f.name: f.dataType for f in new.schema.fields}
         vals = [c for c in data_cols if c not in keys]
@@ -5248,24 +5307,11 @@ def table_changes(
     keyed = _table_changes_keyed(spark, table, from_version, to_version)
     if keyed is not None:
         return keyed
-    new = read_snapshot(spark, table, version=to_version)
-    old = read_snapshot(spark, table, version=from_version)
-    new_types = dict(new.dtypes)
-    old_types = dict(old.dtypes)
-    # columns added in the range pad the old side with their declared
-    # DEFAULT (r10) — the keyed path's rule, so carried rows cancel
-    to_defaults = (
-        _read_manifest_root(table, to_version).get("defaults") or {}
+    new, old = _harmonize(
+        read_snapshot(spark, table, version=to_version),
+        read_snapshot(spark, table, version=from_version),
+        _read_manifest_root(table, to_version).get("defaults") or {},
     )
-    for c in new.columns:
-        if c not in old_types:
-            old = old.withColumn(
-                c, F.lit(to_defaults.get(c)).cast(new_types[c])
-            )
-        elif old_types[c] != new_types[c]:
-            old = old.withColumn(c, F.col(c).cast(new_types[c]))
-    for c in [c for c in old.columns if c not in new_types]:
-        new = new.withColumn(c, F.lit(None).cast(old_types[c]))
     old = old.select(*new.columns)
     # set ops are undefined over MapType: diff map columns through
     # their canonical sorted-entry image and restore the original type
@@ -5301,8 +5347,10 @@ def table_changes_physical(
     ``_change_type='insert'`` rows, files removed as ``'delete'`` —
     with ``_commit_version`` / ``_commit_mode`` attached.
 
-    This is the batch twin of the streaming change-feed source and the
-    cheap alternative to :func:`table_changes`' exceptAll fallback: data
+    It reads the same per-commit change plan as the streaming
+    change-feed source (:func:`_plan_commit_changes`), one scan per
+    change kind and segment schema, and is the cheap alternative to
+    :func:`table_changes`' exceptAll fallback: data
     files are immutable, so the diff is EXACT as a multiset, planning
     touches only manifests, reading touches only changed files, and the
     plan has ZERO exchanges. The trade: a copy-on-write rewrite's
@@ -5314,10 +5362,9 @@ def table_changes_physical(
 
     Deletion-vector commits (``delete_dv``/``update_dv``) move no
     files, but their row deletes ARE surfaced: the per-file vector
-    DELTA (new-minus-old positions, the streaming source's exact
-    logic, batch-side) reads just the delta rows of the shadowed
-    files as ``'delete'``; a later rewrite that removes a DV'd file
-    excludes the already-vectored positions from its file-removal
+    DELTA (new-minus-old positions) reads just the delta rows of the
+    shadowed files as ``'delete'``; a later rewrite that removes a DV'd
+    file excludes the already-vectored positions from its file-removal
     deletes, so a folding consumer never double-deletes. Small vectors
     (``DV_LITERAL_POSITIONS``) filter as plan literals; larger sidecars
     parse executor-side and join, broadcast when small — the base file
@@ -5339,38 +5386,28 @@ def table_changes_physical(
     end_manifest = _read_manifest_root(table, to_version)
     target = StructType.fromJson(end_manifest["schema"])
     aliases = end_manifest.get("aliases", {})
-    meta = [
-        ("_change_type", "string"),
-        ("_commit_version", "long"),
-        ("_commit_mode", "string"),
-    ]
+    end_defaults = end_manifest.get("defaults") or {}
 
-    def normalize(
-        files: list[str],
-        seg_schema: dict,
-        ct: str,
-        v: int,
-        mode: str,
-        dv_drop: dict | None = None,
-        dv_take: "tuple[dict, dict] | None" = None,
-    ):
-        """Read ``files``, pad to the end schema, stamp CDC meta.
-        ``dv_drop`` excludes vectored positions (insert of a shadowed
-        file / removal of a file whose vectored rows were already
-        emitted); ``dv_take`` keeps ONLY the cur-minus-prev vector
-        delta (the rows a DV commit newly deleted)."""
-        part = spark.read.schema(StructType.fromJson(seg_schema)).parquet(
-            *[os.path.join(table, f) for f in files]
+    def scan(kind: str, schema: dict, fds: list, v: int, mode: str):
+        """Read one group's files, apply its vectors, pad to the end
+        schema, stamp CDC meta."""
+        part = spark.read.schema(StructType.fromJson(schema)).parquet(
+            *[os.path.join(table, f) for f, _ in fds]
         )
-        if dv_drop:
-            part = _dv_filter(spark, table, part, dv_drop)
-        if dv_take is not None:
-            cur_map, prev_map = dv_take
+        if kind == "grown":
             part = _dv_filter(
-                spark, table, part, cur_map, take=True, minus=prev_map
+                spark,
+                table,
+                part,
+                {f: cur for f, (cur, _) in fds},
+                take=True,
+                minus={f: prev for f, (_, prev) in fds if prev is not None},
             )
+        else:
+            drop = {f: dv for f, dv in fds if dv is not None}
+            if drop:
+                part = _dv_filter(spark, table, part, drop)
         cur = {aliases.get(c, c): c for c in part.columns}
-        end_defaults = end_manifest.get("defaults") or {}
         cols = []
         for f in target.fields:
             src = cur.get(f.name)
@@ -5385,32 +5422,10 @@ def table_changes_physical(
             )
         return part.select(
             *cols,
-            F.lit(ct).alias("_change_type"),
+            F.lit("delete" if kind == "grown" else kind).alias("_change_type"),
             F.lit(v).cast("long").alias("_commit_version"),
             F.lit(mode).alias("_commit_mode"),
         )
-
-    def _changed_segments(m_root: dict, p_root: dict | None):
-        """(cur_segs, prev_segs) RESOLVED, with segments whose sidecar
-        ref appears in BOTH versions dropped from both sides — identical
-        detail contributes nothing to a file diff, so the shared bulk of
-        an 800k-file table is never opened."""
-        cur = _segments(m_root)
-        prev = _segments(p_root) if p_root is not None else []
-        shared = {
-            s["ref"] for s in cur if _is_seg_head(s)
-        } & {s["ref"] for s in prev if _is_seg_head(s)}
-        cur = [
-            _resolve_seg(table, s)
-            for s in cur
-            if not (_is_seg_head(s) and s["ref"] in shared)
-        ]
-        prev = [
-            _resolve_seg(table, s)
-            for s in prev
-            if not (_is_seg_head(s) and s["ref"] in shared)
-        ]
-        return cur, prev
 
     pieces = []
     for v in range(max(from_version, -1) + 1, to_version + 1):
@@ -5420,88 +5435,25 @@ def table_changes_physical(
             # rewrites emit nothing instead of cancellable churn
             continue
         p_root = _read_manifest_root(table, v - 1) if v > 0 else None
-        cur_segs, prev_segs = _changed_segments(m_root, p_root)
-        # membership sets stay UNPRUNED (a file moved between segments
-        # must never be misread as removed+inserted); the subscriber
-        # filter applies only at emission below
-        prev_files = {f for s in prev_segs for f in s["files"]}
-        cur_files = {f for s in cur_segs for f in s["files"]}
-        allow: "set[str] | None" = None
-        if skip_filter:
-            allow = set()
-            for s in cur_segs + prev_segs:
-                allow.update(
-                    _prune_segment_files(s, aliases, skip_filter)
-                )
-        # per-file deletion-vector entries on each side (shared-ref
-        # segments dropped above have IDENTICAL vectors — no delta)
-        cur_dvs: dict[str, dict] = {}
-        for s in cur_segs:
-            mem = set(s["files"])
-            cur_dvs.update(
-                {k: e for k, e in _seg_dvs(s).items() if k in mem}
-            )
-        prev_dvs: dict[str, dict] = {}
-        for s in prev_segs:
-            mem = set(s["files"])
-            prev_dvs.update(
-                {k: e for k, e in _seg_dvs(s).items() if k in mem}
-            )
-        # one read per (change type, segment schema): files sharing a
-        # schema batch into a single multi-file scan
-        by_seg: dict[tuple, tuple[list[str], dict, str]] = {}
-        # DV deltas: a file present in BOTH versions whose vector GREW —
-        # the grown positions are this commit's row deletes
-        dv_delta: dict[tuple, tuple[list[str], dict]] = {}
-        for s in cur_segs:
-            for f in s["files"]:
-                if allow is not None and f not in allow:
-                    continue
-                if f not in prev_files:
-                    key = ("insert", json.dumps(s["schema"], sort_keys=True))
-                    by_seg.setdefault(key, ([], s["schema"], "insert"))[0].append(f)
-                elif f in cur_dvs and cur_dvs[f] != prev_dvs.get(f):
-                    key = (json.dumps(s["schema"], sort_keys=True),)
-                    dv_delta.setdefault(key, ([], s["schema"]))[0].append(f)
-        for s in prev_segs:
-            for f in s["files"]:
-                if allow is not None and f not in allow:
-                    continue
-                if f not in cur_files:
-                    key = ("delete", json.dumps(s["schema"], sort_keys=True))
-                    by_seg.setdefault(key, ([], s["schema"], "delete"))[0].append(f)
-        for (ct, _), (files, schema, _ct) in list(by_seg.items()):
-            # a removed file's already-vectored rows were emitted as
-            # deletes when vectored — exclude them here; an inserted
-            # file born shadowed likewise never exposes vectored rows
-            side = prev_dvs if ct == "delete" else cur_dvs
-            drop = {f: side[f] for f in files if f in side}
-            pieces.append(
-                normalize(
-                    files, schema, ct, v, m_root["mode"], dv_drop=drop or None
-                )
-            )
-        for files, schema in dv_delta.values():
-            take_cur = {f: cur_dvs[f] for f in files}
-            take_prev = {
-                f: prev_dvs[f] for f in files if f in prev_dvs
-            }
-            pieces.append(
-                normalize(
-                    files,
-                    schema,
-                    "delete",
-                    v,
-                    m_root["mode"],
-                    dv_take=(take_cur, take_prev),
-                )
-            )
+        # one read per (change kind, segment schema): files sharing a
+        # schema batch into a single multi-file scan; vector deltas last
+        groups: dict[tuple, tuple[dict, list]] = {}
+        for kind, schema, f, dv in _plan_commit_changes(
+            table, m_root, p_root, aliases, skip_filter
+        ):
+            key = (kind, json.dumps(schema, sort_keys=True))
+            groups.setdefault(key, (schema, []))[1].append((f, dv))
+        for (kind, _), (schema, fds) in sorted(
+            groups.items(), key=lambda kv: kv[0][0] == "grown"
+        ):
+            pieces.append(scan(kind, schema, fds, v, m_root["mode"]))
     if not pieces:
-        full = StructType(
-            list(target.fields)
-        )
-        out = spark.createDataFrame([], full)
-        for name, t in meta:
+        out = spark.createDataFrame([], StructType(list(target.fields)))
+        for name, t in (
+            ("_change_type", "string"),
+            ("_commit_version", "long"),
+            ("_commit_mode", "string"),
+        ):
             out = out.withColumn(name, F.lit(None).cast(t))
         return out
     out = pieces[0]

@@ -25,9 +25,11 @@ the slowest subscriber's offset, or a restarted stream will find its
 next batch's files reclaimed (same rule as Delta CDF).
 
 Scale shape: one ``InputPartition`` per changed file — read parallelism
-equals changed-file count, planning is manifest-only (no data I/O on the
-driver), and an idle table produces empty batches for free since
-``latestOffset`` just reads the pointer.
+equals changed-file count. Planning is manifest-only (no data I/O on the
+driver) and is the batch feed's: each version's file diff comes from
+``_plan_commit_changes`` (sources/versioned.py), which opens only the
+segment sidecars the commit changed. An idle table produces empty
+batches for free since ``latestOffset`` just reads the pointer.
 """
 
 from __future__ import annotations
@@ -42,7 +44,7 @@ from pyspark.sql.datasource import (
     InputPartition,
 )
 
-from .versioned import _read_manifest, _read_pointer
+from .versioned import _plan_commit_changes, _read_manifest_root, _read_pointer
 
 
 class ChangeFile(InputPartition):
@@ -92,31 +94,51 @@ def _target_schema(table: str):
     latest = _read_pointer(table)
     if latest is None:
         raise FileNotFoundError(f"no committed version in {table}")
-    manifest = _read_manifest(table, latest)
+    manifest = _read_manifest_root(table, latest)
     return StructType.fromJson(manifest["schema"]), manifest
 
 
 def _to_arrow_schema(fields):
     """Arrow schema for a Spark StructType with timestamps normalized
     tz-naive (Spark's Arrow deserializer for Python-source batches
-    expects naive); None when the conversion isn't available — callers
-    fall back to per-row tuple yields. Shared by the streaming change
-    feed and the batch table reader."""
-    try:
-        import pyarrow as pa
-        from pyspark.sql.pandas.types import to_arrow_schema
+    expects naive). Shared by the streaming change feed and the batch
+    table reader, which call it on the driver when they are built: a
+    column type Arrow cannot carry (an interval, say) raises
+    ``UNSUPPORTED_DATA_TYPE_FOR_ARROW_CONVERSION`` there, before any
+    task starts, since Spark's Python-source transfer is Arrow either
+    way."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
 
-        schema = to_arrow_schema(fields)
-        return pa.schema(
-            [
-                pa.field(f.name, pa.timestamp(f.type.unit))
-                if pa.types.is_timestamp(f.type) and f.type.tz is not None
-                else f
-                for f in schema
-            ]
-        )
-    except Exception:
-        return None
+    return pa.schema(
+        [
+            pa.field(f.name, pa.timestamp(f.type.unit))
+            if pa.types.is_timestamp(f.type) and f.type.tz is not None
+            else f
+            for f in to_arrow_schema(fields)
+        ]
+    )
+
+
+def _col_map(
+    fields: list[str], aliases: dict, defaults: dict, seg_schema: dict
+) -> "tuple[list[tuple[str, str | None]], dict | None]":
+    """How one segment's files present as the table: ``(col_map,
+    defaults)``. ``col_map`` is ``[(target_name, file_column_or_None)]``
+    per output field, resolved through the alias map (it composes every
+    historical rename, so any older file's columns resolve to current
+    names); ``defaults`` holds the declared DEFAULT of each column the
+    segment predates (None when there is none), which the executor fills
+    instead of NULL — what a snapshot read and the logical diff show for
+    those rows. Resolved on the DRIVER, so executors need no manifest
+    access. Shared by the stream and batch readers."""
+    by_current = {
+        aliases.get(f["name"], f["name"]): f["name"]
+        for f in seg_schema.get("fields", [])
+    }
+    cm = [(t, by_current.get(t)) for t in fields]
+    dflt = {t: defaults[t] for t, src in cm if src is None and t in defaults}
+    return cm, dflt or None
 
 
 def _dv_positions(table: str, ref: str, rel: str):
@@ -211,8 +233,7 @@ def _load_file_table(
     row_cvs: "tuple | None" = None,
 ):
     """One data file as a pyarrow Table with deletion vectors applied —
-    the shared loader for the Arrow and per-row read paths (stream +
-    batch DataSource).
+    the shared loader of the stream and batch DataSource readers.
 
     ``rg_filter`` (r9): row-group predicate pushdown — groups whose
     footer min/max provably exclude the pushed range/point filter are
@@ -505,12 +526,8 @@ class VersionedChangesStreamReader(DataSourceStreamReader):
         self._last_end: int | None = self.start_v
         target, manifest = _target_schema(self.table)
         self.fields = [f["name"] for f in manifest["schema"]["fields"]]
-        # Arrow fast path: pre-resolve the declared output schema to its
-        # Arrow form ONCE on the driver; executors then hand Spark whole
-        # RecordBatches instead of per-row Python tuples — the difference
-        # between a backfill streaming a 100 TB table through a Python
-        # loop and through Arrow's columnar transfer. Falls back to
-        # row-tuple yields if the conversion isn't available.
+        # the declared output schema in Arrow form, resolved ONCE on the
+        # driver: executors hand Spark whole RecordBatches, never rows
         from pyspark.sql.types import (
             LongType,
             StringType,
@@ -549,304 +566,86 @@ class VersionedChangesStreamReader(DataSourceStreamReader):
         # latestOffset, which plans zero files but anchors the next
         # capped batch at the CHECKPOINT offset
         self._last_end = b
-        # the END manifest's alias map composes every historical rename,
-        # so any older file's columns resolve to current names through it
-        end_manifest = _read_manifest(self.table, b)
-        aliases = end_manifest.get("aliases", {})
-
-        def col_map(seg_schema: dict) -> list[tuple[str, str | None]]:
-            by_current = {
-                aliases.get(f["name"], f["name"]): f["name"]
-                for f in seg_schema.get("fields", [])
-            }
-            return [(t, by_current.get(t)) for t in self.fields]
-
-        end_defaults = end_manifest.get("defaults") or {}
-
-        def dmap(seg_schema: dict) -> "dict | None":
-            # defaulted columns this file's schema predates: the
-            # executor fills the declared constant, so a change-feed
-            # fold reproduces exactly what the logical diff (and any
-            # snapshot read) shows for those rows
-            if not end_defaults:
-                return None
-            have = {
-                aliases.get(f["name"], f["name"])
-                for f in seg_schema.get("fields", [])
-            }
-            d = {
-                t: v for t, v in end_defaults.items() if t not in have
-            }
-            return d or None
-
-        def allowed(m: dict) -> set[str] | None:
-            """Files of ``m`` surviving the subscriber's skip_filter
-            (None = keep all). Manifest-stats only — no data I/O."""
-            if not self.skip_filter:
-                return None
-            from .versioned import _prune_segment_files, _segments
-
-            out: set[str] = set()
-            for seg in _segments(m):
-                out.update(
-                    _prune_segment_files(seg, aliases, self.skip_filter)
-                )
-            return out
-
+        end_root = _read_manifest_root(self.table, b)
+        aliases = end_root.get("aliases", {})
+        defaults = end_root.get("defaults") or {}
         parts: list[InputPartition] = []
         for v in range(max(a, -1) + 1, b + 1):
-            # APPEND fast path over sharded roots: the commit protocol
-            # strictly extends the segment list, so the delta is the
-            # positional tail — only ITS detail sidecars are opened.
-            # Plans stay O(delta), not O(table), per version.
             try:
-                from .versioned import (
-                    _is_seg_head,
-                    _prune_segment_files,
-                    _read_manifest_root,
-                    _resolve_seg,
-                    _segments,
-                )
-
-                m_root = _read_manifest_root(self.table, v)
-                if (
-                    self.skip_compactions
-                    and m_root["mode"] == "compact"
-                    and v > 0
-                ):
-                    try:
-                        _read_manifest_root(self.table, v - 1)
-                        # carry-only rewrite: no CDC events (Delta CDF's
-                        # OPTIMIZE behavior). If the PARENT expired this
-                        # version doubles as the horizon snapshot and
-                        # must still deliver — fall through below.
-                        continue
-                    except FileNotFoundError:
-                        pass
-                if m_root["mode"] == "append" and v > 0:
-                    try:
-                        p_root = _read_manifest_root(self.table, v - 1)
-                    except FileNotFoundError:
-                        p_root = None
-                    cur_segs = _segments(m_root)
-                    prev_segs = (
-                        _segments(p_root) if p_root is not None else None
-                    )
-                    if (
-                        prev_segs is not None
-                        and len(cur_segs) >= len(prev_segs)
-                        and all(
-                            _is_seg_head(x)
-                            and _is_seg_head(y)
-                            and x["ref"] == y["ref"]
-                            for x, y in zip(prev_segs, cur_segs)
-                        )
-                    ):
-                        for head in cur_segs[len(prev_segs) :]:
-                            seg = _resolve_seg(self.table, head)
-                            keep = (
-                                None
-                                if not self.skip_filter
-                                else set(
-                                    _prune_segment_files(
-                                        seg, aliases, self.skip_filter
-                                    )
-                                )
-                            )
-                            for f in seg["files"]:
-                                if keep is None or f in keep:
-                                    parts.append(
-                                        ChangeFile(
-                                            self.table,
-                                            f,
-                                            "insert",
-                                            v,
-                                            m_root["mode"],
-                                            col_map(seg["schema"]),
-                                            rg_filter=self._rg,
-                                            defaults=dmap(seg["schema"]),
-                                        )
-                                    )
-                        continue
-            except FileNotFoundError:
-                continue  # expired: handled by the snapshot branch below
-            try:
-                m = _read_manifest(self.table, v)
+                root = _read_manifest_root(self.table, v)
             except FileNotFoundError:
                 # expire_history trimmed this version: its changes are
-                # superseded by the oldest RETAINED version, which the
-                # branch below delivers as a full snapshot
+                # superseded by the oldest RETAINED version, which
+                # delivers its whole state below
                 continue
-            prev_files: set[str] = set()
-            prev_m = None
-            if v > 0:
-                try:
-                    prev_m = _read_manifest(self.table, v - 1)
-                    prev_files = set(prev_m["files"])
-                except FileNotFoundError:
-                    # parent expired: v is the retention horizon — a
-                    # subscriber starting below it gets v's whole state
-                    # as inserts (initial-snapshot semantics); a LAGGING
-                    # subscriber with pre-horizon state should reset its
-                    # checkpoint (deletes older than the horizon are
-                    # unrecoverable by design)
-                    prev_m = None
-            def _dvs_of(mm) -> dict[str, dict]:
-                # filter to seg["files"]: a dv entry for a file the
-                # segment no longer owns (stale carry) must not shadow
-                # the owning segment's newer ref
-                out = {}
-                for seg in mm.get(
-                    "segments",
-                    [{"files": mm["files"], "schema": mm["schema"]}],
-                ):
-                    members = set(seg["files"])
-                    out.update(
-                        {
-                            k: v
-                            for k, v in seg.get("dvs", {}).items()
-                            if k in members
-                        }
-                    )
-                return out
-
-            file_seg = {}
-            for seg in m.get("segments", [{"files": m["files"], "schema": m["schema"]}]):
-                for f in seg["files"]:
-                    file_seg[f] = seg
-            cur_dvs = _dvs_of(m)
-            prev_dvs = _dvs_of(prev_m) if prev_m is not None else {}
-            allow_cur = allowed(m)
-            for f in m["files"]:
-                if f not in prev_files and (
-                    allow_cur is None or f in allow_cur
-                ):
-                    parts.append(
-                        ChangeFile(
-                            self.table, f, "insert", v, m["mode"],
-                            col_map(file_seg[f]["schema"]),
-                            defaults=dmap(file_seg[f]["schema"]),
-                            # a file can arrive ALREADY carrying a
-                            # vector (rollback to / clone of a DV'd
-                            # version): its deleted rows never insert
-                            dv_drop=(
-                                (self.table, cur_dvs[f]["ref"], f)
-                                if f in cur_dvs
-                                else None
-                            ),
-                            rg_filter=(
-                                None if f in cur_dvs else self._rg
-                            ),
-                        )
-                    )
-                elif (
-                    f in prev_files
-                    and cur_dvs.get(f, {}).get("ref")
-                    != prev_dvs.get(f, {}).get("ref")
-                    and f in cur_dvs
-                    and (allow_cur is None or f in allow_cur)
-                ):
+            try:
+                prev = (
+                    _read_manifest_root(self.table, v - 1) if v > 0 else None
+                )
+            except FileNotFoundError:
+                # parent expired: v is the retention horizon — a
+                # subscriber starting below it gets v's whole state as
+                # inserts (initial-snapshot semantics); a LAGGING
+                # subscriber with pre-horizon state should reset its
+                # checkpoint (deletes older than the horizon are
+                # unrecoverable by design)
+                prev = None
+            if (
+                self.skip_compactions
+                and root["mode"] == "compact"
+                and prev is not None
+            ):
+                # carry-only rewrite: no CDC events (Delta CDF's
+                # OPTIMIZE behavior); the horizon version still delivers
+                continue
+            for kind, schema, f, dv in _plan_commit_changes(
+                self.table, root, prev, aliases, self.skip_filter
+            ):
+                cm, dflt = _col_map(self.fields, aliases, defaults, schema)
+                if kind == "grown":
                     # metadata-only DV delete: the file is unchanged but
                     # its vector grew — emit EXACTLY the newly-deleted
-                    # positions as delete rows (row-accurate CDC for
-                    # delete_dv commits, which move zero data files)
+                    # positions as delete rows
+                    cur, old = dv
                     parts.append(
                         ChangeFile(
-                            self.table, f, "delete", v, m["mode"],
-                            col_map(file_seg[f]["schema"]),
-                            defaults=dmap(file_seg[f]["schema"]),
+                            self.table, f, "delete", v, root["mode"], cm,
                             dv_take=(
-                                self.table,
-                                cur_dvs[f]["ref"],
-                                f,
-                                prev_dvs.get(f, {}).get("ref"),
+                                self.table, cur["ref"], f, old and old["ref"]
                             ),
+                            defaults=dflt,
                         )
                     )
-            if prev_m is not None:
-                prev_file_seg = {}
-                for seg in prev_m.get(
-                    "segments",
-                    [{"files": prev_m["files"], "schema": prev_m["schema"]}],
-                ):
-                    for f in seg["files"]:
-                        prev_file_seg[f] = seg
-                cur_files = set(m["files"])
-                allow_prev = allowed(prev_m)
-                for f in prev_m["files"]:
-                    if f not in cur_files and (
-                        allow_prev is None or f in allow_prev
-                    ):
-                        parts.append(
-                            ChangeFile(
-                                self.table, f, "delete", v, m["mode"],
-                                col_map(prev_file_seg[f]["schema"]),
-                                defaults=dmap(prev_file_seg[f]["schema"]),
-                                # rows the file's vector had ALREADY
-                                # deleted were reported when the vector
-                                # landed — a rewrite/compact removing
-                                # the file must not re-delete them
-                                dv_drop=(
-                                    (
-                                        self.table,
-                                        prev_dvs[f]["ref"],
-                                        f,
-                                    )
-                                    if f in prev_dvs
-                                    else None
-                                ),
-                                rg_filter=(
-                                    None if f in prev_dvs else self._rg
-                                ),
-                            )
-                        )
+                    continue
+                parts.append(
+                    ChangeFile(
+                        self.table, f, kind, v, root["mode"], cm,
+                        dv_drop=(self.table, dv["ref"], f) if dv else None,
+                        rg_filter=None if dv else self._rg,
+                        defaults=dflt,
+                    )
+                )
         return parts
 
-    def read(self, partition: ChangeFile) -> Iterator[tuple]:
+    def read(self, partition: ChangeFile) -> Iterator:
         # executor-side: plain pyarrow file read, projected and re-ordered
         # to the declared schema (shared _file_arrays path)
-        path = os.path.join(partition.table, partition.file)
-        if self._arrow_schema is not None:
-            import pyarrow as pa
+        import pyarrow as pa
 
-            sch = self._arrow_schema
-            arrays, n = _file_arrays(
-                path,
-                partition.col_map,
-                sch,
-                dv_drop=partition.dv_drop,
-                dv_take=partition.dv_take,
-                rg_filter=partition.rg_filter,
-                defaults=partition.defaults,
-            )
-            arrays.append(pa.array([partition.change_type] * n, pa.string()))
-            arrays.append(pa.array([partition.version] * n, pa.int64()))
-            arrays.append(pa.array([partition.mode] * n, pa.string()))
-            yield pa.RecordBatch.from_arrays(arrays, schema=sch)
-            return
-        # fallback: per-row python tuples (values coerce as natives)
-        want = [s for _, s in partition.col_map if s is not None]
-        tbl = _load_file_table(
-            path,
-            want,
-            partition.dv_drop,
-            partition.dv_take,
-            rg_filter=_to_file_rg_filter(
-                partition.col_map, partition.rg_filter
-            ),
+        sch = self._arrow_schema
+        arrays, n = _file_arrays(
+            os.path.join(partition.table, partition.file),
+            partition.col_map,
+            sch,
+            dv_drop=partition.dv_drop,
+            dv_take=partition.dv_take,
+            rg_filter=partition.rg_filter,
+            defaults=partition.defaults,
         )
-        n = tbl.num_rows
-        dflt = partition.defaults or {}
-        cols = {}
-        for tgt, src in partition.col_map:
-            if src is not None:
-                cols[tgt] = tbl.column(src).to_pylist()
-            else:
-                cols[tgt] = [dflt.get(tgt)] * n
-        tail = (partition.change_type, partition.version, partition.mode)
-        names = [t for t, _ in partition.col_map]
-        for i in range(n):
-            yield tuple(cols[t][i] for t in names) + tail
+        arrays.append(pa.array([partition.change_type] * n, pa.string()))
+        arrays.append(pa.array([partition.version] * n, pa.int64()))
+        arrays.append(pa.array([partition.mode] * n, pa.string()))
+        yield pa.RecordBatch.from_arrays(arrays, schema=sch)
 
     def commit(self, end: dict) -> None:
         pass  # the checkpoint offset log is the ledger; nothing to ack

@@ -46,12 +46,15 @@ writes, and streaming sinks are one commit path with three surfaces.
 
 Scale shape — shared with the streaming change feed
 (sources/versioned_stream.py): planning is manifest-only on the driver
-(no data I/O), one ``InputPartition`` per data file so read parallelism
-equals file count, ``skip_filter`` pruning happens at plan time against
-the manifest's per-file stats, and executors hand Spark whole Arrow
-RecordBatches through the same ``_file_arrays`` path the stream reader
-uses. The read pins ONE manifest at plan time: a concurrent commit
-never tears the file set (same guarantee as ``read_snapshot``).
+(no data I/O) and is ``read_snapshot``'s own (``_plan_snapshot``: head
+summary, per-file stats/blooms and commit-version pruning), one
+``InputPartition`` per data file so read parallelism equals file count,
+and executors hand Spark whole Arrow RecordBatches through the
+``_file_arrays`` loader and ``_col_map`` column mapping the stream
+reader uses — the only transfer there is, so a column type Arrow cannot
+carry fails when the reader is built, before any task runs. The read
+pins ONE manifest at plan time: a concurrent commit never tears the
+file set (same guarantee as ``read_snapshot``).
 
 Semantics parity is tested against ``read_snapshot`` on the same
 fixtures, including time travel, schema evolution (rename/widen
@@ -77,17 +80,14 @@ from pyspark.sql.datasource import (
 
 from .versioned import (
     _commit_new_segment,
-    _head_may_match,
-    _is_seg_head,
-    _prune_segment_files,
+    _plan_snapshot,
     _read_manifest_root,
     _read_pointer,
-    _resolve_seg,
-    _segments,
+    _seg_row_tracked,
     read_snapshot,
     version_as_of,
 )
-from .versioned_stream import _file_arrays, _to_arrow_schema
+from .versioned_stream import _col_map, _file_arrays, _to_arrow_schema
 
 
 class TableFile(InputPartition):
@@ -249,75 +249,27 @@ class VersionedTableReader(DataSourceReader):
 
     def partitions(self) -> Sequence[InputPartition]:
         aliases = self.manifest.get("aliases", {})
-
-        def col_map(seg_schema: dict):
-            by_current = {
-                aliases.get(f["name"], f["name"]): f["name"]
-                for f in seg_schema.get("fields", [])
-            }
-            return [(t, by_current.get(t)) for t in self.fields]
-
+        defaults = self.manifest.get("defaults") or {}
+        rg = None
+        if (self.skip_filter or self.point_filter) and not self.with_row_ids:
+            rg = {}
+            if self.skip_filter:
+                rg["rng"] = {c: list(b) for c, b in self.skip_filter.items()}
+            if self.point_filter:
+                rg["pts"] = {c: list(v) for c, v in self.point_filter.items()}
         parts: list[InputPartition] = []
-        for seg in _segments(self.manifest):
-            if (
-                self.cv_after is not None
-                and seg.get("cv") is not None
-                and seg.get("cv") <= self.cv_after
-            ):
-                continue  # every row inside set at or before the bound
-            if _is_seg_head(seg):
-                if (
-                    self.skip_filter or self.point_filter
-                ) and not _head_may_match(
-                    seg, aliases, self.skip_filter, self.point_filter
-                ):
-                    continue  # whole segment pruned from the root summary
-                seg = _resolve_seg(self.table, seg)
-            files = (
-                _prune_segment_files(
-                    seg, aliases, self.skip_filter, self.point_filter
-                )
-                if self.skip_filter or self.point_filter
-                else seg["files"]
-            )
-            cvs = seg.get("cvs") or {}
-            if self.cv_after is not None and cvs:
-                # sub-segment prune (r10, JVM-path twin in
-                # changed_rows_since): skip files whose carried-cv
-                # range predates the bound; any NULL cv coalesces to
-                # the surviving head cv and keeps its file
-                def _admits(f: str) -> bool:
-                    st = cvs.get(f)
-                    if st is None or st["nulls"]:
-                        return True
-                    return st["hi"] is not None and st["hi"] > self.cv_after
-                files = [f for f in files if _admits(f)]
-            cm = col_map(seg["schema"])
-            tdef = self.manifest.get("defaults") or {}
-            dmap = (
-                {t: tdef[t] for t, sc in cm if sc is None and t in tdef}
-                or None
-                if tdef
-                else None
-            )
+        for seg in _plan_snapshot(
+            self.table,
+            self.manifest,
+            self.skip_filter,
+            self.point_filter,
+            self.cv_after,
+        ):
+            cm, dmap = _col_map(self.fields, aliases, defaults, seg["schema"])
             dvs = seg.get("dvs", {})
-            rg = None
-            if (self.skip_filter or self.point_filter) and not (
-                self.with_row_ids
-            ):
-                rg = {}
-                if self.skip_filter:
-                    rg["rng"] = {
-                        c: list(b) for c, b in self.skip_filter.items()
-                    }
-                if self.point_filter:
-                    rg["pts"] = {
-                        c: list(v) for c, v in self.point_filter.items()
-                    }
+            cvs = seg.get("cvs") or {}
             row_base: dict[str, tuple] = {}
             if self.with_row_ids:
-                from .versioned import _seg_row_tracked
-
                 if not _seg_row_tracked(seg):
                     raise ValueError(
                         f"{self.table}: segment files lack row lineage "
@@ -361,7 +313,7 @@ class VersionedTableReader(DataSourceReader):
                     cv_rg=_cv_rg(f),
                     defaults=dmap,
                 )
-                for f in files
+                for f in seg["files"]
             )
         return parts
 
@@ -371,63 +323,20 @@ class VersionedTableReader(DataSourceReader):
             # CREATE's v0, or everything pruned): Spark still invokes
             # read once with a None partition; yield no batches
             return
-        path = os.path.join(partition.table, partition.file)
-        if self._arrow_schema is not None:
-            import pyarrow as pa
+        import pyarrow as pa
 
-            arrays, _ = _file_arrays(
-                path,
-                partition.col_map,
-                self._arrow_schema,
-                dv_drop=partition.dv_drop,
-                rg_filter=partition.rg_filter,
-                row_ids=partition.row_ids,
-                row_cvs=partition.row_cvs,
-                cv_rg=partition.cv_rg,
-                defaults=partition.defaults,
-            )
-            yield pa.RecordBatch.from_arrays(
-                arrays, schema=self._arrow_schema
-            )
-            return
-        from .versioned import ROW_CV_OUT, ROW_ID_OUT
-        from .versioned_stream import (
-            _load_file_table,
-            _merge_cv_rg,
-            _to_file_rg_filter,
-        )
-
-        want = [s for _, s in partition.col_map if s is not None]
-        tbl = _load_file_table(
-            path,
-            want,
+        arrays, _ = _file_arrays(
+            os.path.join(partition.table, partition.file),
+            partition.col_map,
+            self._arrow_schema,
             dv_drop=partition.dv_drop,
-            rg_filter=_merge_cv_rg(
-                _to_file_rg_filter(partition.col_map, partition.rg_filter),
-                partition.cv_rg,
-            ),
+            rg_filter=partition.rg_filter,
             row_ids=partition.row_ids,
             row_cvs=partition.row_cvs,
+            cv_rg=partition.cv_rg,
+            defaults=partition.defaults,
         )
-        n = tbl.num_rows
-        dflt = partition.defaults or {}
-        cols = {
-            tgt: (
-                tbl.column(src).to_pylist()
-                if src is not None
-                else [dflt.get(tgt)] * n
-            )
-            for tgt, src in partition.col_map
-        }
-        names = [t for t, _ in partition.col_map]
-        if partition.row_ids is not None:
-            cols[ROW_ID_OUT] = tbl.column(ROW_ID_OUT).to_pylist()
-            names = names + [ROW_ID_OUT]
-        if partition.row_cvs is not None:
-            cols[ROW_CV_OUT] = tbl.column(ROW_CV_OUT).to_pylist()
-            names = names + [ROW_CV_OUT]
-        for i in range(n):
-            yield tuple(cols[t][i] for t in names)
+        yield pa.RecordBatch.from_arrays(arrays, schema=self._arrow_schema)
 
 
 class VersionedTablePushdownReader(VersionedTableReader):
